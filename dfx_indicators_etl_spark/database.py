@@ -172,16 +172,12 @@ def build_star_schema(obs: DataFrame, country: DataFrame) -> dict[str, DataFrame
     compute once each (one distinct-shuffle over small key sets); the
     fact is broadcast-join-only.
 
-    ``obs`` feeds three consumers (two dim builds + the fact), and an
-    unmaterialized plan would re-scan the fact lineage once per
-    consumer — five scans of the source in the observation view. The
-    lazy localCheckpoint materializes the observation projection on
-    first action, so the whole star derives from ONE pass over the
-    fact (the batch analogue of staging observations before loading a
-    warehouse; a 100 TB deployment writes this to a staging table —
-    same plan, durable storage).
+    ``obs`` feeds three consumers (two dim builds + the fact), and each
+    scans it, so it should be materialized: the landed parquet that
+    ``pipelines.run_all`` returns is (the batch analogue of staging
+    observations before loading a warehouse). A caller holding an
+    expensive lazy lineage lands or checkpoints it first.
     """
-    obs = obs.localCheckpoint(eager=False)
     indicator = indicator_dim(obs)
     dimension = dimension_dim(obs)
     return {

@@ -187,9 +187,10 @@ def filter_countries(df: DataFrame, allowed: DataFrame, column: str, key: str) -
 
     Reference: transformers drop any row whose ``country_code`` is not
     in UNSD M49 (_base.py:212-218). Broadcast LEFT SEMI join — no
-    fact shuffle, no duplication however many dim rows match.
+    fact shuffle, no duplication however many dim rows match, so the
+    key side needs no ``distinct`` (which would cost a shuffle job).
     """
-    allowed_keys = F.broadcast(allowed.select(F.col(key).alias(column)).distinct())
+    allowed_keys = F.broadcast(allowed.select(F.col(key).alias(column)))
     return df.join(allowed_keys, on=column, how="left_semi")
 
 

@@ -7,6 +7,10 @@ classes — the switchboard equivalent of the reference's
 stand-in for ``country_converter`` / the UNSD M49 table).
 """
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+
 from . import (
     energydata_info,
     healthdata_ghdx,
@@ -114,17 +118,22 @@ def run_all(
     retrieve → transform (+M49 filter +year cut) → versioned load, one
     pipeline per ``inputs`` key. ``inputs[name]`` holds the retriever
     kwargs (a pre-staged ``payload`` frame, a ``path``, or nothing for
-    live-HTTP retrievers). Returns ``{name: transformed DataFrame}``;
-    each source also lands under
-    ``<storage_root>/<version>/<name>.parquet``.
+    live-HTTP retrievers). Each source lands under
+    ``<storage_root>/<version>/<name>.parquet``, and the result maps
+    ``name`` to that landed dataset (see ``Pipeline``: it is valid until
+    a same-day run into the same root overwrites it).
 
-    Per-source work is independent, but retrieval here is sequential
-    driver control flow like the notebook — the heavy lifting (each
-    transform + write) is already distributed, and at scale pipelines
-    are scheduled as separate jobs anyway.
+    Sources land concurrently, one thread per input: a source's jobs
+    are mostly single-task and its wall time is largely driver-side
+    planning, so one source alone leaves most cores idle. Each thread
+    starts from the caller's local properties and session tags
+    (``inheritable_thread_target``), so a job group set by the caller
+    holds every job ``run_all`` runs. If sources fail, the first
+    failing source in ``inputs`` order re-raises its error once every
+    thread has finished.
     """
-    results = {}
-    for name, kwargs in inputs.items():
+
+    def land(name: str, kwargs: dict):
         pipeline = get_pipeline(
             name,
             country_mapping=country_mapping,
@@ -133,5 +142,13 @@ def run_all(
             country_key=country_key,
             settings=settings,
         )
-        results[name] = pipeline.run(spark, **kwargs)
-    return results
+        return pipeline.run(spark, **kwargs)
+
+    with ThreadPoolExecutor(max_workers=max(1, len(inputs))) as pool:
+        # wrap per source, here in the caller's thread: each wrapper
+        # captures its own copy of the local properties
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(land), name, kwargs)
+            for name, kwargs in inputs.items()
+        }
+    return {name: future.result() for name, future in futures.items()}

@@ -13,11 +13,13 @@ transformer base classes). Differences are deliberate:
   instead of raising (``validation.validate_split``) — at scale a bad
   record must not abort the job.
 - ``load`` writes a versioned parquet **directory** via
-  ``sources.sinks.write_dataset``.
+  ``sources.sinks.write_dataset`` and hands back that dataset, so the
+  source transform runs once per refresh however many consumers follow.
 """
 
 from __future__ import annotations
 
+import logging
 from abc import ABC, abstractmethod
 from dataclasses import dataclass, field
 
@@ -32,6 +34,8 @@ try:  # no HTTP client / network in the verification harness
     import httpx  # type: ignore
 except ImportError:  # pragma: no cover
     httpx = None
+
+logger = logging.getLogger(__name__)
 
 __all__ = [
     "PipelineSettings",
@@ -96,9 +100,13 @@ class BaseRetriever(ABC):
 
     ``provider`` derives from the module name, matching the reference's
     convention (``_base.py:62-70``) — it names the output dataset.
+    ``failed_fetches`` lists the URLs whose series ``fetch_csv`` skipped.
     """
 
     uri: str = ""
+
+    def __init__(self) -> None:
+        self.failed_fetches: list[str] = []
 
     @property
     def provider(self) -> str:
@@ -158,8 +166,9 @@ class BaseRetriever(ABC):
 
         The reference's ``BaseRetriever.read_csv``
         (`/root/reference/src/dfx_etl/pipelines/_base.py:131-172`):
-        GET → ``pd.read_csv``, swallowing HTTP errors to ``None`` so a
-        per-indicator loop skips failed series. Spark-first shape: the
+        GET → ``pd.read_csv``, turning HTTP errors into ``None`` so a
+        per-indicator loop skips failed series; the error is logged and
+        the URL recorded in ``failed_fetches``. Spark-first shape: the
         bytes land once in a driver-local staging file and the *parse*
         runs through ``spark.read.csv`` (distributed, pushdown-able) —
         at scale a multi-GB SDMX extract never materializes as Python
@@ -186,7 +195,8 @@ class BaseRetriever(ABC):
         except NotImplementedError:
             raise
         except Exception as error:  # httpx timeout / status → skip series
-            print(error)
+            logger.warning("fetch_csv: skipping %s: %s", url, error)
+            self.failed_fetches.append(url)
             return None
         import os
 
@@ -249,8 +259,14 @@ class Pipeline:
     """One-source ETL run (`_pipeline.py:22-121`).
 
     ``run`` = retrieve → transform (+M49 filter) → year-range cut →
-    versioned parquet load; returns the transformed frame like the
-    reference's ``__call__``.
+    versioned parquet load; returns what landed, like the reference's
+    ``__call__`` returns its output.
+
+    After ``load``, ``df_transformed`` is the landed dataset read back
+    (``<root>/<version>/<provider>.parquet``), so every consumer scans
+    that parquet instead of running the source transform again. The
+    frame stays valid only while those files do: a re-run into the same
+    root on the same day overwrites them under it.
     """
 
     retriever: BaseRetriever
@@ -284,17 +300,25 @@ class Pipeline:
         return self
 
     def load(self) -> str:
+        """Write ``df_transformed`` and rebind it to the written dataset;
+        returns the dataset's path."""
         if self.df_transformed is None:
             raise ValueError("No validated data. Run the transformation first")
         if self.storage_root is None:
             root = sinks.resolve_storage_root()
         else:
             root = self.storage_root
-        return sinks.write_dataset(
+        path = sinks.write_dataset(
             self.df_transformed, root, self.retriever.provider
         )
+        # the schema is known, so reading back runs no inference job
+        self.df_transformed = self.df_transformed.sparkSession.read.schema(
+            validation.DATA_SCHEMA
+        ).parquet(path)
+        return path
 
     def run(self, spark: SparkSession, **kwargs) -> DataFrame:
+        """retrieve → transform → load; returns the landed frame."""
         self.retrieve(spark, **kwargs)
         self.transform()
         self.load()

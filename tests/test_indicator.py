@@ -87,6 +87,19 @@ def test_map_country_metadata_nonmatch_nulls(spark):
     assert out == {1: "Algeria", 2: None}
 
 
+def test_filter_countries_duplicate_allowed_keys(spark):
+    """A semi join keeps each row once, however often its key is allowed."""
+    df = spark.createDataFrame(
+        [(1, "FRA"), (2, "FRA"), (3, "DEU"), (4, "XXX")], ["id", "country_code"]
+    )
+    allowed = spark.createDataFrame(
+        [("FRA", "France"), ("FRA", "France (dup)"), ("DEU", "Germany"), ("DEU", "Germany")],
+        ["iso_alpha_3", "name"],
+    )
+    out = ops.filter_countries(df, allowed, "country_code", "iso_alpha_3")
+    assert sorted(r["id"] for r in out.collect()) == [1, 2, 3]
+
+
 def test_interpolate_years_values(spark):
     df = spark.createDataFrame(
         [

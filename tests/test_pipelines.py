@@ -174,9 +174,14 @@ def test_pipeline_end_to_end(spark, country_mapping, tmp_path):
     assert result.columns == CANON
     # 2004 row cut by settings.year_min
     assert {(r.country_code, r.year) for r in result.collect()} == {("FRA", 2019)}
-    loaded = spark.read.parquet(str(next(tmp_path.glob("v*/sipri_milex.parquet"))))
+    landed = str(next(tmp_path.glob("v*/sipri_milex.parquet")))
+    loaded = spark.read.parquet(landed)
     assert loaded.count() == 1
     assert {r.provider for r in loaded.collect()} == {"sipri_milex"}
+    # the result is the landed dataset, not the transform's lineage
+    files = result.inputFiles()
+    assert files and all(f.startswith(f"file://{landed}/") for f in files)
+    assert sorted(result.collect()) == sorted(loaded.collect())
 
 
 def test_retrievers_guarded(spark):

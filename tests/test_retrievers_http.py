@@ -387,14 +387,21 @@ def test_fetch_csv_stages_bytes_for_spark(spark, monkeypatch):
     ]
 
 
-def test_fetch_csv_http_error_returns_none(spark, monkeypatch):
+def test_fetch_csv_http_error_returns_none(spark, monkeypatch, capsys, caplog):
     r = unicef_sdmx_api.Retriever()
 
     def boom(url, params=None):
         raise RuntimeError("HTTP 404")
 
     monkeypatch.setattr(r, "fetch_bytes", boom)
-    assert r.fetch_csv(spark, "https://example/missing.csv") is None
+    url = "https://example/missing.csv"
+    with caplog.at_level("WARNING", logger=base.__name__):
+        assert r.fetch_csv(spark, url) is None
+    # the failure is recorded and logged, not printed
+    assert r.failed_fetches == [url]
+    assert any(url in rec.getMessage() and "HTTP 404" in rec.getMessage() for rec in caplog.records)
+    assert capsys.readouterr().out == ""
+    assert unicef_sdmx_api.Retriever().failed_fetches == []
 
 
 def test_fetch_csv_without_httpx_raises_not_implemented(spark):

@@ -173,6 +173,9 @@ def test_run_all_sweeps_every_source(spark, tmp_path, country_mapping):
         assert df.count() > 0, name
         landed = glob.glob(f"{root}/v*/{name}.parquet")
         assert len(landed) == 1, name
+        assert all(
+            f.startswith(f"file://{landed[0]}/") for f in df.inputFiles()
+        ), name
         back = spark.read.parquet(landed[0])
         assert back.count() == df.count(), name
         assert {r["provider"] for r in back.select("provider").collect()} == {
@@ -247,3 +250,58 @@ def test_get_pipeline_wires_country_mapping(spark, country_mapping):
     # identity-transformer sources take no mapping
     p2 = get_pipeline("imf_datamapper_api")
     assert isinstance(p2.transformer, imf_datamapper_api.Transformer)
+
+
+def _two_sources(spark, tmp):
+    inputs = _all_inputs(spark, tmp, None)
+    return {n: inputs[n] for n in ("sipri_milex", "imf_datamapper_api")}
+
+
+def test_run_all_raises_a_failing_source(spark, tmp_path, country_mapping, monkeypatch):
+    def boom(self, spark, **kwargs):
+        raise RuntimeError("imf retriever down")
+
+    monkeypatch.setattr(imf_datamapper_api.Retriever, "__call__", boom)
+    root = tmp_path / "store"
+    with pytest.raises(RuntimeError, match="imf retriever down"):
+        run_all(
+            spark,
+            _two_sources(spark, tmp_path),
+            storage_root=str(root),
+            country_mapping=country_mapping,
+            countries=country_mapping,
+        )
+    # the other source still landed; the failing one did not
+    assert len(list(root.glob("v*/sipri_milex.parquet"))) == 1
+    assert not list(root.glob("v*/imf_datamapper_api.parquet"))
+
+
+def _jobs_in(sc, group: str) -> list[int]:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_all_jobs_run_under_the_callers_job_group(spark, tmp_path, country_mapping):
+    """Every job between two marker jobs belongs to the caller's group,
+    including the jobs of the worker threads."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("run-all-before", "marker")
+        spark.range(1).count()
+        sc.setJobGroup("run-all-caller", "run_all")
+        run_all(
+            spark,
+            _two_sources(spark, tmp_path),
+            storage_root=str(tmp_path / "store"),
+            country_mapping=country_mapping,
+            countries=country_mapping,
+        )
+        sc.setJobGroup("run-all-after", "marker")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    first = _jobs_in(sc, "run-all-before")[-1] + 1
+    end = _jobs_in(sc, "run-all-after")[0]
+    grouped = _jobs_in(sc, "run-all-caller")
+    assert grouped and grouped == list(range(first, end))
