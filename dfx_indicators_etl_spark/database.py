@@ -11,27 +11,27 @@ star schema *is* a set of DataFrames a caller writes as (bucketed)
 tables.
 
 Surrogate keys are dense ranks over the natural key: deterministic
-and reproducible in plain SQL, unlike ``monotonically_increasing_id``.
-The rank strategy is picked from the dim's actual size (``_with_id``):
-broadcast-sized dims rank in one bounded partition; larger dims
-range-repartition on the key, rank *within* each partition, then add
-per-partition offsets — bit-identical to a global ``DENSE_RANK() OVER
-(ORDER BY key)`` without ever funneling an unbounded distinct-value
-set through one task (the r2 plan-audit weak spot: the combined-
-``dimension`` dim can be high-cardinality at fact scale even though
-country/indicator dims stay small).
+and reproducible in plain SQL (``DENSE_RANK() OVER (ORDER BY name)``),
+unlike ``monotonically_increasing_id``. The dims are small tables kept
+on the driver as one-partition local relations
+(``sources.readers.local_relation``): the fact joins broadcast every
+dim, so a dim must fit on the driver anyway. There the two derived
+dims are numbered in plain Python from one aggregation over the
+observations, with no window, shuffle or checkpoint, and the
+observation view snapshots all three.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .operators.indicator import insert_ignore, upsert
+from .sources.readers import local_relation
 
 __all__ = [
-    "indicator_dim",
-    "dimension_dim",
     "series_fact",
     "build_star_schema",
     "observation_view",
@@ -40,90 +40,23 @@ __all__ = [
 ]
 
 
-def _with_id(
-    df: DataFrame,
-    order_col: str,
-    id_name: str = "id",
-    small_dim_rows: int = 1_000_000,
-) -> DataFrame:
-    """Dense-rank surrogate ids without an unbounded single-task sort.
-
-    ``DENSE_RANK() OVER (ORDER BY key)`` — the reference's deterministic
-    id rule and what the DuckDB oracles compute — normally plans as an
-    unpartitioned Window: every distinct dim value through one task,
-    unacceptable when a dim is fact-scale. But MOST dims are broadcast
-    sized, and the distributed rank's fixed costs (range-sampling pass,
-    per-partition offset probe) tripled the star-build wall time at
-    bench SF. So, like a broadcast-join decision, pick the strategy
-    from the data: the input is checkpointed and counted once (the
-    count doubles as the checkpoint materialization), and
-
-    - ``n ≤ small_dim_rows``: rank in ONE partition (window still keyed
-      by ``__pid``, which is constant) — identical execution to the
-      global window, explicitly bounded by the threshold;
-    - larger: the distributed plan — range-repartition by key (equal
-      keys co-locate), dense-rank within each partition, then add the
-      count of distinct keys in earlier partitions (a ≤-#partitions-row
-      control-plane collect).
-
-    The ids are bit-identical to the global window's for any input, so
-    the SQL oracles still reproduce them.
-    """
-    spark = df.sparkSession
-    df = df.localCheckpoint(eager=False)
-    n_rows = df.count()  # materializes the checkpoint; one scalar back
-
-    if n_rows <= small_dim_rows:
-        keyed = df.repartition(1).withColumn("__pid", F.spark_partition_id())
-        w = Window.partitionBy("__pid").orderBy(order_col)
-        return keyed.select(
-            F.dense_rank().over(w).cast("int").alias(id_name), "*"
-        ).drop("__pid")
-
-    n_parts = max(1, spark.sparkContext.defaultParallelism)
-    # Materialize the partitioning: spark_partition_id() must agree
-    # between the offset probe and the rank projection.
-    parted = df.repartitionByRange(n_parts, F.col(order_col)).localCheckpoint(
-        eager=False
-    )
-    keyed = parted.withColumn("__pid", F.spark_partition_id())
-    counts = sorted(
-        (r["__pid"], r["n"])
-        for r in keyed.groupBy("__pid")
-        .agg(F.count_distinct(order_col).alias("n"))
-        .collect()
-    )
-    offsets, running = {}, 0
-    for pid, n in counts:
-        offsets[pid] = running
-        running += n
-    offset_expr = F.element_at(
-        F.create_map(
-            *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-        ),
-        F.col("__pid"),
-    )
-    w = Window.partitionBy("__pid").orderBy(order_col)
-    return keyed.select(
-        (F.dense_rank().over(w) + offset_expr).cast("int").alias(id_name), "*"
-    ).drop("__pid")
-
-
-def indicator_dim(obs: DataFrame) -> DataFrame:
-    """``indicator(id, name, provider)`` (entities.py:50-60)."""
-    return _with_id(
-        obs.select(
-            F.col("indicator_name").alias("name"), "provider"
-        ).dropDuplicates(["name"]),
-        "name",
+def _dim_schema(obs: DataFrame, **columns: str) -> T.StructType:
+    """``id int`` (never null), then each named dim column typed like
+    the ``obs`` column it comes from."""
+    return T.StructType(
+        [T.StructField("id", T.IntegerType(), nullable=False)]
+        + [
+            T.StructField(name, obs.schema[src].dataType, obs.schema[src].nullable)
+            for name, src in columns.items()
+        ]
     )
 
 
-def dimension_dim(obs: DataFrame) -> DataFrame:
-    """``dimension(id, name)`` (entities.py:63-74)."""
-    return _with_id(
-        obs.select(F.col("dimension").alias("name")).distinct(), "name"
-    )
+def _ranked(names) -> list:
+    """Distinct ``names`` in ``ORDER BY name`` order: nulls first, then
+    Python's code-point order, which is Spark's UTF-8 binary order. The
+    1-based position of a name is its ``DENSE_RANK()``."""
+    return sorted(set(names), key=lambda n: (n is not None, n or ""))
 
 
 def series_fact(
@@ -168,18 +101,49 @@ def build_star_schema(obs: DataFrame, country: DataFrame) -> dict[str, DataFrame
     """Observations + country dim → the four star-schema tables.
 
     ``country`` carries at least ``(id, iso_3)`` (the reference seeds it
-    from the UNSD M49 table, entities.py:137-160). The two derived dims
-    compute once each (one distinct-shuffle over small key sets); the
-    fact is broadcast-join-only.
+    from the UNSD M49 table, entities.py:137-160). Both derived dims
+    come from ONE aggregation over ``obs`` — the distinct
+    ``(indicator_name, dimension)`` pairs with their least provider —
+    collected to the driver, which numbers each dim's sorted distinct
+    names ``1..n`` (``_ranked``). So ``indicator(id, name, provider)``
+    (entities.py:50-60) takes the least provider of a name, and
+    ``dimension(id, name)`` (entities.py:63-74) its ids; both return as
+    local relations. The dims are eager, and bounded like any broadcast
+    side: ``series_fact`` broadcasts them.
 
-    ``obs`` feeds three consumers (two dim builds + the fact), and each
-    scans it, so it should be materialized: the landed parquet that
-    ``pipelines.run_all`` returns is (the batch analogue of staging
-    observations before loading a warehouse). A caller holding an
-    expensive lazy lineage lands or checkpoints it first.
+    The fact stays lazy and scans ``obs`` once more when it runs, so
+    ``obs`` should be materialized: the landed parquet that
+    ``pipelines.run_all`` returns is. A caller holding an expensive lazy
+    lineage lands or checkpoints it first.
     """
-    indicator = indicator_dim(obs)
-    dimension = dimension_dim(obs)
+    spark = obs.sparkSession
+    pairs = (
+        obs.groupBy("indicator_name", "dimension")
+        .agg(F.min("provider").alias("provider"))
+        .toArrow()
+        .to_pylist()
+    )
+    providers: dict = {}
+    for row in pairs:
+        providers.setdefault(row["indicator_name"], set()).add(row["provider"])
+    names = _ranked(providers)
+    indicator = local_relation(
+        spark,
+        pa.table(
+            {
+                "id": list(range(1, len(names) + 1)),
+                "name": names,
+                "provider": [min(providers[n] - {None}, default=None) for n in names],
+            }
+        ),
+        _dim_schema(obs, name="indicator_name", provider="provider"),
+    )
+    names = _ranked(row["dimension"] for row in pairs)
+    dimension = local_relation(
+        spark,
+        pa.table({"id": list(range(1, len(names) + 1)), "name": names}),
+        _dim_schema(obs, name="dimension"),
+    )
     return {
         "country": country,
         "indicator": indicator,
@@ -190,9 +154,19 @@ def build_star_schema(obs: DataFrame, country: DataFrame) -> dict[str, DataFrame
 
 def observation_view(star: dict[str, DataFrame]) -> DataFrame:
     """The ``observation`` wide view (entities.py:98-132): series LEFT
-    JOIN the three dims, every dim broadcast."""
-    series, country = star["series"], star["country"]
-    indicator, dimension = star["indicator"], star["dimension"]
+    JOIN the three dims, every dim broadcast.
+
+    The dims are a snapshot taken when the view is built: each is
+    collected once into a local relation, so the queries over the view
+    broadcast rows held in the plan instead of scanning the dim tables
+    again. A dim written after that needs a new view; the series fact
+    stays a lazy scan.
+    """
+    series = star["series"]
+    country, indicator, dimension = (
+        local_relation(series.sparkSession, star[name].toArrow(), star[name].schema)
+        for name in ("country", "indicator", "dimension")
+    )
     return (
         series.join(
             F.broadcast(country).withColumnsRenamed(

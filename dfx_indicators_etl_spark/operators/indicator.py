@@ -236,13 +236,15 @@ def upsert(
     Incoming rows replace existing rows on key conflicts; duplicate
     keys inside ``incoming`` resolve to the first row under
     ``order_cols`` (latest-wins when passed a descending timestamp).
-    Implemented as window-dedup + anti-join + union: two key-wise
-    shuffles, no driver-side state — the MERGE INTO pattern without a
-    table format dependency.
+    Implemented as anti-join + window-dedup + union, no driver-side
+    state — the MERGE INTO pattern without a table format dependency.
+    The anti-join takes the raw incoming keys (dedup leaves the key set
+    unchanged), so the dedup's shuffle on the key runs once instead of
+    once more under the anti-join's build side.
     """
+    keep = existing.join(incoming.select(*key_cols), on=list(key_cols), how="left_anti")
     if order_cols is not None:
         incoming = dedup_first(incoming, key_cols, order_cols)
-    keep = existing.join(incoming.select(*key_cols), on=list(key_cols), how="left_anti")
     return keep.unionByName(incoming)
 
 

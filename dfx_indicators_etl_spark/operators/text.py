@@ -473,9 +473,9 @@ def pack_spans(
     table a pretraining data loader materializes.
 
     The global running token sum is the scale hazard (a naive
-    ``SUM OVER (ORDER BY id)`` plans as ONE task). Same adaptive shape
-    as ``database._with_id``: corpora under ``small_corpus_rows`` run
-    the single-partition window explicitly bounded by the threshold;
+    ``SUM OVER (ORDER BY id)`` plans as ONE task). So the plan adapts
+    to the input's size: corpora under ``small_corpus_rows`` run the
+    single-partition window explicitly bounded by the threshold;
     larger corpora range-repartition by id, cumsum within partitions,
     and add per-partition token totals collected as a
     ≤-#partitions-row control-plane map — bit-identical to the global

@@ -23,7 +23,7 @@ from typing import Literal
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .readers import read_csv
+from .readers import local_relation, read_csv
 
 __all__ = [
     "M49_RAW_SCHEMA",
@@ -73,7 +73,7 @@ def get_country_metadata(
     matching pandas' int round-trip in the reference).
 
     Control-plane only (the vendored table is a few hundred rows) —
-    use ``load_m49`` for the distributed frame.
+    use ``load_m49`` for the Spark frame.
     """
     column = _FIELD_COLUMNS[field]
     # utf-8-sig: the published file leads with a BOM
@@ -115,12 +115,18 @@ def load_m49(spark: SparkSession, path: str | None = None) -> DataFrame:
     ``name / m49 / iso_alpha_2 / iso_alpha_3 / region / subregion /
     ldc / lldc / sids``. The x-marks-membership flag columns become
     booleans (utils.py:84-115 reads them the same way).
+
+    Spark reads the CSV, so any path or URI the session can open works,
+    and the rows come back as a one-partition local relation, read once
+    when this is called. Every pipeline's country filter, the country
+    dim and its write then use those rows instead of parsing the CSV
+    again.
     """
     raw = read_csv(
         spark, path or PACKAGED_M49_PATH, schema=M49_RAW_SCHEMA, sep=";"
     )
     flag = lambda c: F.col(c).isNotNull() & (F.trim(F.col(c)) != "")  # noqa: E731
-    return raw.select(
+    m49 = raw.select(
         F.col("Country or Area").alias("name"),
         F.col("M49 Code").cast("int").cast("string").alias("m49"),
         F.col("ISO-alpha2 Code").alias("iso_alpha_2"),
@@ -131,6 +137,7 @@ def load_m49(spark: SparkSession, path: str | None = None) -> DataFrame:
         flag("Land Locked Developing Countries (LLDC)").alias("lldc"),
         flag("Small Island Developing States (SIDS)").alias("sids"),
     ).filter(F.col("iso_alpha_3").isNotNull())
+    return local_relation(spark, m49.toArrow(), m49.schema)
 
 
 def m49_country_dim(m49: DataFrame) -> DataFrame:

@@ -9,11 +9,16 @@ intermediates.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import ensure_session_confs
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 __all__ = [
     "TABLES",
@@ -23,6 +28,7 @@ __all__ = [
     "register_views",
     "read_csv",
     "read_jsonl",
+    "local_relation",
 ]
 
 # Canonical test/bench tables (TPC-H-ish star schema + events stream +
@@ -172,3 +178,17 @@ def read_jsonl(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
+
+
+def local_relation(spark: SparkSession, rows: pa.Table, schema: T.StructType) -> DataFrame:
+    """A one-partition local relation over driver-side ``rows`` (an
+    Arrow table; ``df.toArrow()`` snapshots a small frame).
+
+    For tables bounded like a broadcast side (the M49 areas, the star's
+    dims): every later broadcast, join or write of the result reads the
+    rows held in the plan instead of running a lineage again.
+    ``createDataFrame`` over Arrow plans as a ``LocalRelation``, where a
+    list of Rows would become a ``LogicalRDD`` that scans several times
+    slower. One partition keeps a written copy at one file.
+    """
+    return spark.createDataFrame(rows, schema).coalesce(1)

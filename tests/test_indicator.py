@@ -77,6 +77,26 @@ def test_upsert_and_insert_ignore(spark):
     assert {(r["k"], r["v"]) for r in ig.collect()} == {("a", 1), ("b", 1), ("c", 1)}
 
 
+def test_upsert_shuffles_incoming_once(spark):
+    """The anti-join takes the raw incoming keys, so the only hash
+    exchange on the key is the dedup's: deduped keys under the
+    anti-join's build side would plan a second, identical one. (Frames
+    from pandas carry size statistics, so the anti-join broadcasts as
+    it does over the landed parquet of a refresh.)"""
+    import re
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    existing = spark.createDataFrame(pd.DataFrame({"k": ["a", "b"], "v": [1, 1]}))
+    incoming = spark.createDataFrame(pd.DataFrame({"k": ["b", "b", "c"], "v": [2, 3, 1]}))
+    up = ops.upsert(existing, incoming, ["k"], [F.col("v").desc()])
+    plan = up._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(k#", plan)) == 1, plan
+    assert {(r["k"], r["v"]) for r in up.collect()} == {("a", 1), ("b", 3), ("c", 1)}
+
+
 def test_map_country_metadata_nonmatch_nulls(spark):
     df = spark.createDataFrame([(1, "DZA"), (2, "XXX")], ["id", "code"])
     mapping = spark.createDataFrame([("DZA", "Algeria")], ["iso3", "name"])

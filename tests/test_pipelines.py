@@ -213,20 +213,24 @@ def test_validate_split(spark):
             ("events", "ind one", "fr", 2020, "Total", 1.0, None),  # bad code
             ("events", "ind one", "DEU", 1800, "Total", 1.0, None),  # bad year
             ("events", "x", "DEU", 2020, "Total", None, None),  # short name + null value
+            ("events", "ind one", None, 2020, "Total", 1.0, None),  # null code
         ],
         "provider string, indicator_name string, country_code string, "
         "year int, dimension string, value double, source string",
     )
     valid, quarantine = validation.validate_split(df)
     assert valid.count() == 1
-    failures = {
-        tuple(sorted(r.failed_rules)) for r in quarantine.collect()
-    }
-    assert failures == {
-        ("country_code",),
-        ("year",),
-        ("indicator_name", "value"),
-    }
+    failures = sorted(
+        ((r.country_code, tuple(sorted(r.failed_rules))) for r in quarantine.collect()),
+        key=str,
+    )
+    assert failures == [
+        ("DEU", ("indicator_name", "value")),
+        ("DEU", ("year",)),
+        ("fr", ("country_code",)),
+        (None, ("country_code",)),
+    ]
+    assert quarantine.columns == df.columns + ["failed_rules"]
 
 
 def test_conform_adds_and_coerces(spark):

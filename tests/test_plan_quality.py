@@ -200,48 +200,87 @@ def test_minhash_all_jvm_single_agg_pass(spark, sf_dir):
     assert "BatchEvalPython" not in _plan(spark, sf_dir, "dedup_minhash")
 
 
+def _star_obs(spark, rows):
+    """Canonical observations over (provider, indicator_name, dimension)
+    triples, spread over several partitions."""
+    return spark.createDataFrame(
+        [(p, name, "FRA", 2020, dim, 1.0) for p, name, dim in rows],
+        "provider string, indicator_name string, country_code string, "
+        "year int, dimension string, value double",
+    ).repartition(4)
+
+
+def _star_country(spark):
+    return spark.createDataFrame(
+        [(250, "FR", "FRA", "France")], "id int, iso_2 string, iso_3 string, name string"
+    )
+
+
 def test_star_dims_no_unpartitioned_window(spark, sf_dir):
-    """Surrogate-key ranks must never plan as a global (unpartitioned)
-    Window — that funnels every distinct dim value through one task.
-    ``database._with_id`` range-partitions first; every Window below it
-    must carry a partition spec and every Sort must be local."""
+    """Surrogate ids never plan as a global (unpartitioned) Window,
+    which funnels every distinct dim value through one task: the dims
+    are local relations numbered on the driver, so their plans hold no
+    Window and no Exchange at all, and the series fact neither ranks
+    nor sorts globally."""
     import re
 
+    from dfx_indicators_etl_spark import database
+
+    star = database.build_star_schema(
+        _star_obs(spark, [("p", "b", "Total"), ("p", "a", "Female")]), _star_country(spark)
+    )
+    for name in ("indicator", "dimension"):
+        plan = star[name]._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "Exchange" not in plan, (name, plan)
+        assert "LocalTableScan" in plan, (name, plan)
+
     plan = _plan(spark, sf_dir, "ind_star_series")
-    for line in plan.splitlines():
-        if "Window" in line and "windowspecdefinition" in line:
-            assert "__pid" in line, f"global window in star plan: {line.strip()[:160]}"
-        # A global Sort prints as `Sort [...], true` (global=true).
-        if re.search(r"\bSort \[.*\], true,", line):
-            raise AssertionError(f"global sort in star plan: {line.strip()[:160]}")
+    assert "Window" not in plan
+    # A global Sort prints as `Sort [...], true` (global=true).
+    assert not re.search(r"\bSort \[.*\], true,", plan)
 
 
-def test_with_id_matches_global_dense_rank(spark):
-    """Bucketed rank must be bit-identical to DENSE_RANK() OVER
-    (ORDER BY key) — the contract the SQL oracles rely on."""
+def test_star_ids_match_global_dense_rank(spark):
+    """Dim ids equal DENSE_RANK() OVER (ORDER BY name) — the contract the
+    SQL oracles rely on — on a multi-partition input whose names are
+    non-ASCII, differ only by case, or order differently in UTF-16 than
+    in code points (U+FF5E against an astral emoji)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from dfx_indicators_etl_spark.database import _with_id
+    from dfx_indicators_etl_spark import database
 
-    names = [(f"name_{i:04d}",) for i in range(997)]
-    df = spark.createDataFrame(names, "name string").repartition(16)
-    expect = {
-        r["name"]: r["id"]
-        for r in df.select(
-            F.dense_rank().over(Window.orderBy("name")).alias("id"), "name"
-        ).collect()
-    }
-    # Both strategies (bounded single-partition and distributed
-    # range-partitioned) must reproduce the global rank exactly.
-    for small_dim_rows in (1_000_000, 0):
-        got = {
+    special = ["Éclair", "éclair", "eclair", "Eclair", "zebra", "Zebra", "ß", "ss",
+               "日本", "\uff5e", "\U0001f600", "a b", "a", "A"]
+    names = special + [f"name_{i:04d}" for i in range(300)]
+    dims = ["Total", "total", "Female", "Ñ", "\U0001f600", "\uff5e", "15-24"]
+    obs = _star_obs(spark, [("p", n, dims[i % len(dims)]) for i, n in enumerate(names)])
+    star = database.build_star_schema(obs, _star_country(spark))
+
+    def ranks(column):
+        distinct = obs.select(F.col(column).alias("name")).distinct()
+        return {
             r["name"]: r["id"]
-            for r in _with_id(
-                df, "name", small_dim_rows=small_dim_rows
+            for r in distinct.select(
+                F.dense_rank().over(Window.orderBy("name")).alias("id"), "name"
             ).collect()
         }
-        assert got == expect, f"small_dim_rows={small_dim_rows}"
+
+    for dim, column in (("indicator", "indicator_name"), ("dimension", "dimension")):
+        got = {r["name"]: r["id"] for r in star[dim].collect()}
+        assert got == ranks(column), dim
+
+
+def test_star_indicator_takes_least_provider(spark):
+    """A name reported by several providers gets the least of them, on
+    any partitioning; null providers count only when no other exists."""
+    from dfx_indicators_etl_spark import database
+
+    rows = [("wb", "gdp", "Total"), ("imf", "gdp", "Female"), ("un", "gdp", "Total"),
+            (None, "pop", "Total"), ("who", "pop", "Total"), (None, "hiv", "Total")]
+    star = database.build_star_schema(_star_obs(spark, rows), _star_country(spark))
+    got = {r["name"]: (r["id"], r["provider"]) for r in star["indicator"].collect()}
+    assert got == {"gdp": (1, "imf"), "hiv": (2, None), "pop": (3, "who")}
 
 
 def test_partitioned_write_static_pruning(spark, sf_dir, tmp_path):

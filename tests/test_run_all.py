@@ -305,3 +305,59 @@ def test_run_all_jobs_run_under_the_callers_job_group(spark, tmp_path, country_m
     end = _jobs_in(sc, "run-all-after")[0]
     grouped = _jobs_in(sc, "run-all-caller")
     assert grouped and grouped == list(range(first, end))
+
+
+def _leaves(df) -> list[str]:
+    """Class names of the leaves of ``df``'s analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.length())]
+
+
+def test_star_build_and_write_job_budget(spark, tmp_path):
+    """Building the star from a landed frame and writing its four
+    tables stays within 9 Spark jobs: one aggregation for both dims,
+    one job per small-table write, three broadcasts and the series
+    write. Each small table lands as one file; M49 and the view's dims
+    are local relations."""
+    import os
+
+    from dfx_indicators_etl_spark import database
+    from dfx_indicators_etl_spark.sources import sinks
+    from dfx_indicators_etl_spark.sources.m49 import load_m49, m49_country_dim
+
+    rows = [
+        (f"p{i % 3}", f"ind {i % 7}", code, 2000 + i % 20, ("Total", "Female")[i % 2],
+         float(i), None)
+        for i, code in enumerate(["FRA", "DEU", "ALB", "USA"] * 50)
+    ]
+    obs = spark.createDataFrame(rows, validation.DATA_SCHEMA)
+    path = sinks.write_dataset(obs, str(tmp_path), "obs", version="v00-01-01")
+    landed = spark.read.schema(validation.DATA_SCHEMA).parquet(path)
+    m49 = load_m49(spark)
+    assert _leaves(m49) == ["LocalRelation"]
+    country = m49_country_dim(m49)
+
+    sc = spark.sparkContext
+    root = str(tmp_path / "star")
+    try:
+        sc.setJobGroup("star-build-write", "build and write the star")
+        star = database.build_star_schema(landed, country)
+        for name, table in star.items():
+            sinks.write_dataset(table, root, name, folder="star", version="v00-01-01")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(_jobs_in(sc, "star-build-write")) <= 9
+
+    for name in ("country", "indicator", "dimension"):
+        files = os.listdir(f"{root}/v00-01-01/star/{name}.parquet")
+        parts = [f for f in files if f.startswith("part-")]
+        assert len(parts) == 1, (name, parts)
+
+    written = {
+        name: spark.read.parquet(f"{root}/v00-01-01/star/{name}.parquet")
+        for name in star
+    }
+    view = database.observation_view(written)
+    assert sorted(_leaves(view)) == ["LocalRelation"] * 3 + ["LogicalRelation"]
+    assert view.count() == len(rows)
