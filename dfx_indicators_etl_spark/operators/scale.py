@@ -1274,8 +1274,10 @@ def kmv_set_ops(
     )
 
 
-def _bloom_position(key_col: str, j: int, n_bits: int, family: str) -> Column:
-    """Bit position of hash stream ``j`` for ``key_col`` in an
+def _bloom_position(
+    df: DataFrame, key_col: str, j: int, n_bits: int, family: str
+) -> Column:
+    """Bit position of hash stream ``j`` for ``df[key_col]`` in an
     ``n_bits`` Bloom filter.
 
     Two families, one contract (build and probe must agree):
@@ -1288,10 +1290,16 @@ def _bloom_position(key_col: str, j: int, n_bits: int, family: str) -> Column:
       string concat — measured ~6 md5-of-string evaluations per fact
       row removed in q_bloom_prefilter_join, whose oracle is the plain
       exact join and therefore family-independent (false positives
-      are removed by the exact join either way).
+      are removed by the exact join either way). ``xxhash64`` hashes
+      an ``int`` and the equal ``bigint`` differently, so integral
+      keys are hashed as ``bigint``: an ``int`` build side must agree
+      with a ``bigint`` probe side.
     """
     if family == "xxhash64":
-        return F.pmod(F.xxhash64(F.col(key_col), F.lit(j)), F.lit(n_bits))
+        key = F.col(key_col)
+        if isinstance(df.schema[key_col].dataType, T.IntegralType):
+            key = key.cast("bigint")
+        return F.pmod(F.xxhash64(key, F.lit(j)), F.lit(n_bits))
     return (
         F.conv(
             F.substring(
@@ -1339,7 +1347,7 @@ def bloom_words(
     ``q_bloom_prefilter_join`` is the proof).
     """
     positions = [
-        _bloom_position(key_col, j, n_bits, family).alias("p")
+        _bloom_position(keys, key_col, j, n_bits, family).alias("p")
         for j in range(n_hashes)
     ]
     exploded = keys.select(
@@ -1370,7 +1378,7 @@ def bloom_prefilter(
     """
     out = fact
     for j in range(n_hashes):
-        pos = _bloom_position(key_col, j, n_bits, family)
+        pos = _bloom_position(fact, key_col, j, n_bits, family)
         b = bloom.select(
             F.col("idx").alias(f"__bf_idx_{j}"),
             F.col("word").alias(f"__bf_word_{j}"),

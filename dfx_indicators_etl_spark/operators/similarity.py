@@ -184,10 +184,10 @@ def _expand_block_pairs(
 
 
 # Measured crossover for the quadratic exact-pairs class (SCALE.md
-# §pair-crossover, round 12; tools/pair_crossover_probe.py): the
+# §Quadratic pair-generation crossover, round 12): the
 # exact blocked self-join costs n²·dim/2 FLOPs, the banded generator
 # ~n·L·bucket_rows·dim — equal at n ≈ 2·L·bucket_rows ≈ 96k with the
-# L=24/2k-bucket defaults, and the probe confirms it on local[32]:
+# L=24/2k-bucket defaults, and a timing run confirms it on local[32]:
 # exact 4.6 s vs banded 53 s at n=50k, exact 329 s vs banded 184 s at
 # n=100k (dim 64). Past the threshold the exact curve is QUADRATIC —
 # at 2× it already loses 4× — so the router flips at the measured

@@ -2022,8 +2022,8 @@ def ind_chained_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Adaptive chain folding (VERDICT r12 #5) -----------------------
 # The recursive-CTE chain costs ~0.3-0.4 s of driver scheduling PER
-# STEP, flat in data volume (tools/chain_fold_probe.py; SCALE.md
-# §round-13 step-cost table) — fine at calendar-year depth, a cliff
+# STEP, flat in data volume (SCALE.md §Chain-fold step cost and the
+# adaptive long-chain swap) — fine at calendar-year depth, a cliff
 # for a monthly/hundreds-step chain. Above CHAIN_CTE_MAX_STEPS the
 # links frame — already control-plane: one row per period, coalesced
 # to 1 partition and checkpointed — is collected and folded

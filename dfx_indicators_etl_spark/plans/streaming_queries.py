@@ -257,11 +257,7 @@ def stream_minhash_dedup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = streaming.stream_minhash_dedup_banded(
             docs, f"{root}/claims", f"{root}/verdicts", family="portable"
         )
-        try:
-            if not q.awaitTermination(streaming.drain_timeout_sec(300)):
-                raise TimeoutError("banded dedup drain exceeded 300s")
-        finally:
-            q.stop()
+        streaming.await_drain(q, 300, "banded dedup drain")
         return (
             spark.read.parquet(f"{root}/verdicts")
             .select("doc_id", "is_dup", "n_bands")  # drop batch_id bookkeeping
@@ -719,11 +715,7 @@ def stream_incremental_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not q.awaitTermination(streaming.drain_timeout_sec(120)):
-                raise TimeoutError("incremental landing drain exceeded 120s")
-        finally:
-            q.stop()
+        streaming.await_drain(q, 120, "incremental landing drain")
         return (
             spark.read.parquet(out)
             .groupBy("event_type")
@@ -836,11 +828,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             q = streaming.stream_upsert_aggregate(
                 stream, f"{root}/table", f"{root}/ckpt"
             )
-            try:
-                if not q.awaitTermination(streaming.drain_timeout_sec(120)):
-                    raise TimeoutError("upsert drain exceeded 120s")
-            finally:
-                q.stop()
+            streaming.await_drain(q, 120, "upsert drain")
         return streaming.read_latest_wins(
             spark, f"{root}/table", ("window_start", "event_type")
         ).localCheckpoint(eager=True)
@@ -1005,11 +993,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .trigger(availableNow=True)
                     .start()
                 )
-                try:
-                    if not q.awaitTermination(streaming.drain_timeout_sec(300)):
-                        raise TimeoutError("left-join drain exceeded 300s")
-                finally:
-                    q.stop()
+                streaming.await_drain(q, 300, "left-join drain")
 
         drain()
         # The heartbeats: one row PER JOIN SIDE (each leg's pushed-down

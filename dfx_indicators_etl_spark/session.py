@@ -76,8 +76,6 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
 
-    daemon_conf = _daemon_preload_conf(master)
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -111,64 +109,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    for key, value in daemon_conf.items():
-        builder = builder.config(key, value)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     _ship_package(spark)
     return spark
-
-
-def _daemon_preload_conf(master: str) -> dict[str, str]:
-    """Conf enabling the warm-import worker daemon (``pydaemon``) when
-    it is safe to do so.
-
-    Spark reaps pooled idle Python workers after a hardcoded 60 s;
-    respawned workers re-import numpy/pandas/pyarrow (~1.7 s CPU each
-    on the measured host — see ``pydaemon`` module docstring). Forking
-    workers from a daemon that already imported them removes that cost
-    for the lifetime of the application (guide §4.5, once per daemon).
-
-    The daemon subprocess is launched by the EXECUTOR as ``python -m
-    dfx_indicators_etl_spark.pydaemon`` with the executor's inherited
-    environment, BEFORE py-files are on any path — so the module must
-    be importable from the raw environment. Enabled only when all of:
-
-    - ``SPARK_GRAFT_DAEMON_PRELOAD`` is not ``0`` (escape hatch);
-    - the master is ``local[...]`` — executor == this process, so the
-      daemon inherits an environment where we can guarantee the
-      package resolves (PYTHONPATH is extended below). On a cluster
-      deploy, install the package on the workers (or bake it into the
-      image) and set ``spark.python.daemon.module`` explicitly — the
-      same rule as any custom daemon;
-    - the package is a real directory on disk (not a zip import).
-
-    Returns either ``{}`` or the one-key conf dict; also extends
-    ``os.environ['PYTHONPATH']`` so the not-yet-launched JVM (and
-    therefore the daemon) inherits the package location. If a JVM
-    gateway already exists, its environment snapshot was taken at
-    launch — in that case the conf is still safe *only* if PYTHONPATH
-    already resolved the package, which is exactly what the
-    ``find_spec``-via-env check verifies.
-    """
-    from pathlib import Path
-
-    if os.environ.get("SPARK_GRAFT_DAEMON_PRELOAD", "1") == "0":
-        return {}
-    if not (master or "").startswith("local"):
-        return {}
-    pkg_dir = Path(__file__).resolve().parent
-    if not pkg_dir.is_dir():
-        return {}
-    parent = str(pkg_dir.parent)
-    existing = os.environ.get("PYTHONPATH", "")
-    paths = existing.split(os.pathsep) if existing else []
-    if parent not in paths:
-        os.environ["PYTHONPATH"] = (
-            os.pathsep.join([parent] + paths) if paths else parent
-        )
-    return {"spark.python.daemon.module": "dfx_indicators_etl_spark.pydaemon"}
 
 
 def _ship_package(spark: SparkSession) -> None:

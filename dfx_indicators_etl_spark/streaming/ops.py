@@ -24,6 +24,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..session import ensure_session_confs
 
@@ -31,6 +32,7 @@ __all__ = [
     "stream_state_partitions",
     "stream_drain_conf",
     "drain_timeout_sec",
+    "await_drain",
     "read_events_stream",
     "read_events_landing",
     "read_documents_stream",
@@ -88,17 +90,32 @@ def drain_timeout_sec(base: int) -> int:
     ``SPARK_GRAFT_DRAIN_TIMEOUT_SCALE`` (default 1.0).
 
     The per-drain base values are sized for a quiet host; a loaded one
-    (the r14 driver run inflated whole-host wall by 2.5–3.5× per the
-    bench anchors) could push a 3 s drain past a fixed 120 s ceiling
-    and turn slowness into a bench ERROR (stream_minhash_dedup in
-    BENCH_full_r15's contended run). The scale knob lets a loaded or
-    slower environment degrade to slow-but-correct instead — the same
-    parameterisation contract as SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS.
-    Derivation documented here; the env path is pytest-pinned
-    (tests/test_round15_opt.py).
+    (2.5–3.5× whole-host slowdowns were measured in round 14) could
+    push a 3 s drain past a fixed 120 s ceiling and turn slowness into
+    an error (stream_minhash_dedup did, on a contended round-15 run).
+    The scale knob lets a loaded or slower environment degrade to
+    slow-but-correct instead — the same parameterisation contract as
+    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS. Every drain waits through
+    ``await_drain``, which reports the scaled value it waited; both are
+    pytest-pinned (tests/test_round15_opt.py).
     """
     scale = float(os.environ.get("SPARK_GRAFT_DRAIN_TIMEOUT_SCALE", "1") or "1")
     return max(1, int(base * scale))
+
+
+def await_drain(query: StreamingQuery, timeout_sec: int, what: str) -> None:
+    """Wait for an AvailableNow ``query`` to drain its backlog, then stop it.
+
+    Waits ``drain_timeout_sec(timeout_sec)`` and raises ``TimeoutError``
+    naming that same effective wait when the backlog was only partly
+    processed (``awaitTermination`` returned ``False``).
+    """
+    timeout = drain_timeout_sec(timeout_sec)
+    try:
+        if not query.awaitTermination(timeout):
+            raise TimeoutError(f"{what} exceeded {timeout}s")
+    finally:
+        query.stop()
 
 
 @contextmanager
@@ -1754,13 +1771,7 @@ def run_late_data_audit(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not query.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(
-                f"late-data audit drain exceeded {timeout_sec}s"
-            )
-    finally:
-        query.stop()
+    await_drain(query, timeout_sec, "late-data audit drain")
 
 
 def run_available_now(
@@ -1784,17 +1795,9 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            # awaitTermination returns False on timeout — in that case
-            # the backlog was only partially processed, and returning
-            # the sink as-is would be silently-wrong results under load.
-            if not query.awaitTermination(drain_timeout_sec(timeout_sec)):
-                raise TimeoutError(
-                    f"AvailableNow drain exceeded {timeout_sec}s; "
-                    "memory sink is incomplete"
-                )
-        finally:
-            query.stop()
+        # A timed-out drain leaves the memory sink incomplete; returning
+        # it would be silently wrong results under load.
+        await_drain(query, timeout_sec, "AvailableNow drain")
     # Materialize before dropping the sink registration.
     result = spark.table(sink).localCheckpoint(eager=True)
     spark.catalog.dropTempView(sink)
@@ -1857,13 +1860,7 @@ def incremental_bitmap_distinct(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(
-                f"bitmap-distinct drain exceeded {timeout_sec}s"
-            )
-    finally:
-        q.stop()
+    await_drain(q, timeout_sec, "bitmap-distinct drain")
 
 
 def incremental_psi_drift(
@@ -1925,11 +1922,7 @@ def incremental_psi_drift(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(f"psi drain exceeded {timeout_sec}s")
-    finally:
-        q.stop()
+    await_drain(q, timeout_sec, "psi drain")
 
 
 def read_psi_drift(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -2008,11 +2001,7 @@ def incremental_cms_sketch(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(f"cms drain exceeded {timeout_sec}s")
-    finally:
-        q.stop()
+    await_drain(q, timeout_sec, "cms drain")
 
 
 def read_cms_sketch(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -2072,13 +2061,7 @@ def incremental_weighted_histogram(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(
-                f"weighted-histogram drain exceeded {timeout_sec}s"
-            )
-    finally:
-        q.stop()
+    await_drain(q, timeout_sec, "weighted-histogram drain")
 
 
 def read_weighted_percentiles(
@@ -2161,13 +2144,7 @@ def incremental_rolling_reach(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(
-                f"rolling-reach drain exceeded {timeout_sec}s"
-            )
-    finally:
-        q.stop()
+    await_drain(q, timeout_sec, "rolling-reach drain")
 
 
 def read_rolling_reach(
@@ -2301,11 +2278,7 @@ def incremental_scd2(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(drain_timeout_sec(timeout_sec)):
-            raise TimeoutError(f"SCD2 drain exceeded {timeout_sec}s")
-    finally:
-        q.stop()
+    await_drain(q, timeout_sec, "SCD2 drain")
 
 
 def read_scd2(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -11,10 +11,12 @@ asserts the query still executes.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dfx_indicators_etl_spark.plans import QUERIES
-from dfx_indicators_etl_spark.session import RUNTIME_CONFS
+from dfx_indicators_etl_spark.session import RUNTIME_CONFS, get_spark
 
 
 def _reset_to_stock_defaults(spark) -> None:
@@ -38,3 +40,13 @@ def test_query_runs_on_stock_default_session(spark, sf_dir, name):
     finally:
         for key, value in RUNTIME_CONFS.items():
             spark.conf.set(key, value)
+
+
+def test_get_spark_leaves_the_process_environment_alone(spark, monkeypatch):
+    """Building a session neither rewrites the caller's PYTHONPATH nor
+    swaps in a custom Python-worker daemon."""
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    get_spark("dfx-tests", master="local[2]", shuffle_partitions=2)
+    assert "PYTHONPATH" not in os.environ
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") is None

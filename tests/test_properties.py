@@ -705,26 +705,34 @@ def test_excise_shared_spans_hand_built(spark):
 )
 def test_bloom_never_false_negative(spark, members, probes):
     """Every member key passes its own Bloom filter, for ANY key set
-    and ANY probe set — the property the oracle equality of
-    q_bloom_prefilter_join rests on (false positives are allowed,
-    false negatives never)."""
+    and ANY probe set, in both hash families — the property the oracle
+    equality of q_bloom_prefilter_join rests on (false positives are
+    allowed, false negatives never). An ``int`` build side probed by a
+    ``bigint`` fact must agree too (``xxhash64`` hashes the two types
+    differently; ``md5`` hashes their equal strings)."""
     from dfx_indicators_etl_spark.operators.scale import (
         bloom_prefilter,
         bloom_words,
     )
 
-    keys = spark.createDataFrame([(k,) for k in members], "k long")
-    words = bloom_words(keys, "k", n_bits=1 << 12, n_hashes=3)
-    fact = spark.createDataFrame(
-        [(k,) for k in set(members) | set(probes)], "k long"
-    )
-    kept = {
-        r["k"]
-        for r in bloom_prefilter(
-            fact, words, "k", n_bits=1 << 12, n_hashes=3
-        ).collect()
-    }
-    assert set(members) <= kept
+    int_members = sorted({k % (1 << 31) for k in members})
+    for family, build_type, built in (
+        ("md5", "long", members),
+        ("xxhash64", "long", members),
+        ("xxhash64", "int", int_members),
+    ):
+        keys = spark.createDataFrame([(k,) for k in built], f"k {build_type}")
+        words = bloom_words(keys, "k", n_bits=1 << 12, n_hashes=3, family=family)
+        fact = spark.createDataFrame(
+            [(k,) for k in set(built) | set(probes)], "k long"
+        )
+        kept = {
+            r["k"]
+            for r in bloom_prefilter(
+                fact, words, "k", n_bits=1 << 12, n_hashes=3, family=family
+            ).collect()
+        }
+        assert set(built) <= kept, (family, build_type)
 
 
 @settings(max_examples=15, deadline=None)

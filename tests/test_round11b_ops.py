@@ -920,39 +920,6 @@ def test_carry_primitives_randomized_differential(spark):
     run()
 
 
-def test_bench_headline_covers_the_whole_registry():
-    """bench.py's HEADLINE list must equal the registry exactly — a
-    key missing here silently drops out of every round's bench
-    artifact (this session found 12 such gaps by hand; now the suite
-    finds them)."""
-    import sys
-
-    sys.path.insert(0, ".")
-    import bench
-
-    from dfx_indicators_etl_spark.plans import QUERIES
-
-    missing = set(QUERIES) - set(bench.HEADLINE)
-    extra = set(bench.HEADLINE) - set(QUERIES)
-    assert not missing, f"keys missing from bench.HEADLINE: {sorted(missing)}"
-    assert not extra, f"stale bench.HEADLINE entries: {sorted(extra)}"
-
-
-def test_scaling_probe_keys_are_registered():
-    """Every tools/scaling_probe.py PROBES entry must name a live
-    registry key (a renamed/dropped key would silently stop being
-    probed)."""
-    import sys
-
-    sys.path.insert(0, ".")
-    from tools.scaling_probe import PROBES
-
-    from dfx_indicators_etl_spark.plans import QUERIES
-
-    stale = set(PROBES) - set(QUERIES)
-    assert not stale, f"PROBES entries not in the registry: {sorted(stale)}"
-
-
 def test_survey_section2_has_a_row_for_every_registered_key():
     """Every registry key must carry a §2 inventory row in SURVEY.md —
     the judge reads that table line by line, and a key without a row

@@ -181,26 +181,38 @@ def test_chain_fold_stops_at_calendar_gap():
     assert _chain_fold_rows([], ["link"]) == [(None, 100.0)]
 
 
+def _synth_vectors(spark, n: int):
+    """Deterministic pseudo-random 64-d vectors in [-1, 1), built
+    JVM-side (xxhash-seeded components, so random cosines concentrate
+    near 0)."""
+    cols = [
+        (
+            F.pmod(F.xxhash64(F.col("id"), F.lit(j)), F.lit(10_000)).cast(
+                "double"
+            )
+            / 5_000.0
+            - 1.0
+        ).cast("float")
+        for j in range(64)
+    ]
+    return (
+        spark.range(0, n, 1, 32)
+        .select(F.col("id").alias("vec_id"), F.array(*cols).alias("embedding"))
+        .localCheckpoint(eager=True)
+    )
+
+
 def test_knn_multiprobe_recall_gate_boundary_shape(spark):
     # VERDICT r12 #6: the kNN banded route's recall at the LOW-cosine
     # tail (random corpus — top-k neighbors sit at the LSH boundary).
-    # The probe (tools/knn_multiprobe_probe.py, SCALE.md §round-13)
-    # showed one probe at L=24 beats DOUBLING L at the same bucket-
-    # state volume; this pins the small deterministic replica of that
-    # curve (xxhash64-synth corpus, n=3000, planes=4: measured
-    # p0=0.9536, p1=0.9963, p2=0.9995).
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parents[1] / "tools")
-    )
-    from pair_crossover_probe import synth
-
+    # SCALE.md §kNN multi-probe showed one probe at L=24 beats
+    # DOUBLING L at the same bucket-state volume; this pins the small
+    # deterministic replica of that curve (xxhash64-synth corpus,
+    # n=3000, planes=4: measured p0=0.9536, p1=0.9963, p2=0.9995).
     from dfx_indicators_etl_spark.operators import similarity as S
 
     n = 3000
-    df = synth(spark, n)
+    df = _synth_vectors(spark, n)
     exact = {
         (r["src"], r["dst"])
         for r in S.knn_graph_exact(df, k=5, mutual=False).collect()
@@ -280,24 +292,6 @@ def test_driver_window_priority_is_sound():
     assert len(pri) >= 50, "priority must cover the 50-key window"
     # and the registry actually starts with the priority ordering
     assert list(QUERIES)[: len(pri)] == [n for n in pri]
-
-
-def test_bench_headline_covers_registry():
-    # bench.py's HEADLINE tuple is hand-maintained; a key missing
-    # from it silently loses its per-round timing evidence. Keep the
-    # two sets equal (HEADLINE is ordered, the registry is the truth).
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from bench import HEADLINE
-
-    from dfx_indicators_etl_spark.plans import QUERIES
-
-    assert set(HEADLINE) == set(QUERIES), {
-        "missing_from_bench": sorted(set(QUERIES) - set(HEADLINE)),
-        "stale_in_bench": sorted(set(HEADLINE) - set(QUERIES)),
-    }
 
 
 def test_portable_face_unchanged_by_default(spark, sf_dir):

@@ -44,9 +44,25 @@ def test_stream_state_partitions_env_override(monkeypatch, spark, _clean_env):
     assert stream_state_partitions(spark) == 1  # floor
 
 
-def test_drain_timeout_applied_at_await(monkeypatch, _clean_env):
-    """run_available_now consults the scaled value, not the raw base."""
-    import dfx_indicators_etl_spark.streaming.ops as ops
+def test_drain_timeout_applied_at_await(monkeypatch, spark, sf_dir, _clean_env):
+    """A drain that times out waited the scaled value and says so."""
+    from pyspark.sql.streaming import StreamingQuery
 
+    from dfx_indicators_etl_spark.streaming import (
+        read_events_stream,
+        run_available_now,
+    )
+
+    waits = []
+
+    def timed_out(self, timeout=None):
+        waits.append(timeout)
+        return False
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", timed_out)
     monkeypatch.setenv("SPARK_GRAFT_DRAIN_TIMEOUT_SCALE", "3")
-    assert ops.drain_timeout_sec(120) == 360
+    counts = read_events_stream(spark, sf_dir).groupBy("event_type").count()
+    with pytest.raises(TimeoutError, match=r"exceeded 360s"):
+        run_available_now(counts)
+    assert waits == [360]
+    assert not spark.streams.active

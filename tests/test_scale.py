@@ -92,42 +92,6 @@ def test_salted_agg_rejects_non_decomposable(spark, sf_dir):
         salted_agg(events, ["event_type"], {"m": ("median", "value")})
 
 
-def test_scaling_probe_upscale_is_true_kx(spark, tmp_path, monkeypatch):
-    """The scaling probe's upscaled tables are true K× instances:
-    K× rows, K× distinct keys (no fan-out), and per-replica-perturbed
-    document tokens (replicas are not near-dups of each other)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    monkeypatch.setenv("SPARK_GRAFT_SCALE_BASE", "/root/testdata/sf0.001")
-    import importlib
-
-    import scaling_probe
-
-    importlib.reload(scaling_probe)
-    scaling_probe.upscale(spark, "documents", 2, str(tmp_path))
-    base = read_table(spark, "/root/testdata/sf0.001", "documents")
-    up = spark.read.parquet(f"{tmp_path}/documents.parquet")
-    assert up.count() == 2 * base.count()
-    assert (
-        up.select("doc_id").distinct().count()
-        == 2 * base.select("doc_id").distinct().count()
-    )
-    # replica tokens perturbed: no text collisions across replicas
-    assert up.select("text").distinct().count() == 2 * base.select(
-        "text"
-    ).distinct().count()
-
-    scaling_probe.upscale(spark, "orders", 2, str(tmp_path))
-    orders = spark.read.parquet(f"{tmp_path}/orders.parquet")
-    base_orders = read_table(spark, "/root/testdata/sf0.001", "orders")
-    # join keys offset on BOTH columns → distinct custkeys double too
-    assert (
-        orders.select("o_custkey").distinct().count()
-        == 2 * base_orders.select("o_custkey").distinct().count()
-    )
-
-
 def test_global_running_sum_matches_window(spark):
     """Two-phase running sum == unpartitioned window running sum for
     ints and exact decimals, duplicate order keys broken by the

@@ -55,7 +55,7 @@ def main() -> int:
         # SPARK_GRAFT_MASTER=local-cluster[4,8,4096] re-runs the gate
         # on a multi-JVM profile (serialized shuffle fetch between
         # executor processes — the cost/correctness component local[n]
-        # hides), same knob as the probe tools.
+        # hides).
         import os
 
         spark = get_spark(
