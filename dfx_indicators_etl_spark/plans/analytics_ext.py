@@ -17,6 +17,7 @@ join/group keys; dims broadcast; measures aggregate in exact decimal
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1292,18 +1293,19 @@ def q_custom_agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     to pin the CUSTOM path's plumbing, on the canonical log-mean-exp
     formulation that stays finite for any positive input)."""
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # Explicit GROUPED_AGG: this module's postponed annotations would
-    # stringify the Series→scalar type hints the inference path needs.
+    # ``Series -> scalar`` hints make a grouped-agg UDF. This module's
+    # annotations are postponed strings, which pyspark resolves against
+    # the module globals, so ``pd`` is imported at module scope.
     # Spark disallows mixing pandas and built-in aggregates in one agg,
     # so the row count is a second pandas aggregate in the same pass.
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
+    @pandas_udf("double")
+    def geomean(v: pd.Series) -> float:
         return float(np.exp(np.log(v.to_numpy(dtype="float64")).mean()))
 
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def cnt(v):
+    @pandas_udf("long")
+    def cnt(v: pd.Series) -> int:
         return len(v)
 
     events, = read_tables(spark, sf_dir, "events")

@@ -630,8 +630,9 @@ def _star(spark: SparkSession, sf_dir: str):
     """,
 )
 def ind_star_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Series fact with surrogate keys (entities.py:77-97): three
-    broadcast dim joins, fact never shuffles."""
+    """Series fact with surrogate keys (entities.py:77-97): the ids are
+    lookups into dim literals folded into the plan, so the fact adds no
+    join to its observations and never shuffles."""
     return _star(spark, sf_dir)["series"]
 
 
@@ -662,7 +663,8 @@ def ind_star_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ind_star_observation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observation wide view (entities.py:98-132): series LEFT JOIN the
-    three broadcast dims."""
+    three dims, as one projection whose names are lookups by id into
+    dim literals folded into the plan."""
     from .. import database
 
     return database.observation_view(_star(spark, sf_dir))
@@ -680,7 +682,7 @@ def ind_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     keying, and the view round-trip lose and invent nothing. Each leg
     keeps its scale shape: versioned write/read is a plain columnar
     round trip, the star derives from one pass over the staged
-    observations, the fact acquires ids through broadcast joins only.
+    observations, the fact acquires ids from literals in its plan.
     """
     import shutil
     import tempfile

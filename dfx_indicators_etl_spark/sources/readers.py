@@ -185,7 +185,7 @@ def local_relation(spark: SparkSession, rows: pa.Table, schema: T.StructType) ->
     Arrow table; ``df.toArrow()`` snapshots a small frame).
 
     For tables bounded like a broadcast side (the M49 areas, the star's
-    dims): every later broadcast, join or write of the result reads the
+    dims): every later collect, join or write of the result reads the
     rows held in the plan instead of running a lineage again.
     ``createDataFrame`` over Arrow plans as a ``LocalRelation``, where a
     list of Rows would become a ``LogicalRDD`` that scans several times

@@ -1787,21 +1787,22 @@ def run_available_now(
     """
     spark = stream_df.sparkSession
     sink = f"stream_sink_{uuid.uuid4().hex[:12]}"
-    with stream_drain_conf(spark):
-        query = (
-            stream_df.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # A timed-out drain leaves the memory sink incomplete; returning
-        # it would be silently wrong results under load.
-        await_drain(query, timeout_sec, "AvailableNow drain")
-    # Materialize before dropping the sink registration.
-    result = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return result
+    try:
+        with stream_drain_conf(spark):
+            query = (
+                stream_df.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            # A timed-out drain leaves the memory sink incomplete; returning
+            # it would be silently wrong results under load.
+            await_drain(query, timeout_sec, "AvailableNow drain")
+        # Materialize before dropping the sink registration.
+        return spark.table(sink).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def incremental_bitmap_distinct(

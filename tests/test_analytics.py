@@ -40,6 +40,19 @@ def test_matches_oracle(name, spark, duck, sf_dir):
     assert _normalize(spark_rows, df.columns) == _normalize(duck_rows, duck_cols)
 
 
+def test_custom_agg_geomean_udfs_use_type_hints(spark, sf_dir):
+    """The key's grouped-agg pandas UDFs are declared by ``Series ->
+    scalar`` type hints, so building it raises no SPARK-28264
+    deprecation warning (its oracle check is ``test_matches_oracle``)."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = QUERIES["q_custom_agg_geomean"](spark, sf_dir)
+    assert not [w for w in caught if "SPARK-28264" in str(w.message)]
+    assert df.columns == ["event_type", "geomean", "n"]
+
+
 def test_q1_plan_pushdown(spark, sf_dir):
     """Filter must reach the parquet scan; agg must be partial (two-phase)."""
     plan = QUERIES["q1_pricing_summary"](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()

@@ -63,12 +63,38 @@ def test_observation_view_fact_never_shuffles(spark, sf_dir):
     assert _shuffles(plan) == 0
 
 
-def test_star_series_fact_side_broadcast_only(spark, sf_dir):
-    """Dim construction may shuffle (tiny distinct/rank inputs); the
-    fact path itself must join by broadcast only."""
-    plan = _plan(spark, sf_dir, "ind_star_series")
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+def test_star_series_fact_joins_no_dim(spark, sf_dir, tmp_path):
+    """The series fact joins no dim: it looks its ids up in literals
+    folded into the plan. Over landed parquet its executed plan holds
+    no join and no exchange, broadcast or shuffle; over the registry's
+    events it adds no join to its ``observations`` input."""
+    from dfx_indicators_etl_spark import database
+    from dfx_indicators_etl_spark.plans.indicator_queries import observations
+
+    obs = spark.createDataFrame(
+        [("p", f"ind {i % 5}", ("FRA", "DEU")[i % 2], 2000 + i, "Total", float(i))
+         for i in range(40)],
+        "provider string, indicator_name string, country_code string, "
+        "year int, dimension string, value double",
+    )
+    obs.write.parquet(str(tmp_path / "obs"))
+    landed = spark.read.parquet(str(tmp_path / "obs"))
+    country = spark.createDataFrame(
+        [(250, "FR", "FRA", "France"), (276, "DE", "DEU", "Germany")],
+        "id int, iso_2 string, iso_3 string, name string",
+    )
+    series = database.build_star_schema(landed, country)["series"]
+    plan = series._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+
+    def joins(plan: str) -> int:
+        return len(re.findall(r"\w+Join\b", plan))
+
+    star = joins(_plan(spark, sf_dir, "ind_star_series"))
+    events = joins(
+        observations(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    )
+    assert events == 1 and star <= events
 
 
 def test_year_filter_pushdown(spark, sf_dir):

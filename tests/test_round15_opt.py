@@ -66,3 +66,20 @@ def test_drain_timeout_applied_at_await(monkeypatch, spark, sf_dir, _clean_env):
         run_available_now(counts)
     assert waits == [360]
     assert not spark.streams.active
+
+
+def test_timed_out_drain_drops_its_sink_view(monkeypatch, spark, sf_dir, _clean_env):
+    """A drain that times out still drops its ``stream_sink_*`` view."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from dfx_indicators_etl_spark.streaming import (
+        read_events_stream,
+        run_available_now,
+    )
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    counts = read_events_stream(spark, sf_dir).groupBy("event_type").count()
+    with pytest.raises(TimeoutError):
+        run_available_now(counts)
+    sinks = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")]
+    assert sinks == []

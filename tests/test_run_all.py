@@ -315,10 +315,12 @@ def _leaves(df) -> list[str]:
 
 def test_star_build_and_write_job_budget(spark, tmp_path):
     """Building the star from a landed frame and writing its four
-    tables stays within 9 Spark jobs: one aggregation for both dims,
-    one job per small-table write, three broadcasts and the series
-    write. Each small table lands as one file; M49 and the view's dims
-    are local relations."""
+    tables stays within 7 Spark jobs: one aggregation for both dims,
+    one collect of the country dim, one job per small-table write and
+    the series write; the fact looks its ids up in the plan, with no
+    broadcast. Each small table lands as one file; M49 is a local
+    relation, and the view over the written star is one projection
+    over the series scan."""
     import os
 
     from dfx_indicators_etl_spark import database
@@ -347,7 +349,7 @@ def test_star_build_and_write_job_budget(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert 0 < len(_jobs_in(sc, "star-build-write")) <= 9
+    assert 0 < len(_jobs_in(sc, "star-build-write")) <= 7
 
     for name in ("country", "indicator", "dimension"):
         files = os.listdir(f"{root}/v00-01-01/star/{name}.parquet")
@@ -359,5 +361,66 @@ def test_star_build_and_write_job_budget(spark, tmp_path):
         for name in star
     }
     view = database.observation_view(written)
-    assert sorted(_leaves(view)) == ["LocalRelation"] * 3 + ["LogicalRelation"]
+    assert _leaves(view) == ["LogicalRelation"]
     assert view.count() == len(rows)
+
+
+def test_observation_view_query_job_budget(spark, tmp_path):
+    """Over a written star, a point query on the view runs one Spark
+    job and a ``groupBy("year")`` scan at most two: the view holds its
+    dims as literals in the plan, so no query broadcasts them."""
+    from pyspark.sql import functions as F
+
+    from dfx_indicators_etl_spark import database
+    from dfx_indicators_etl_spark.sources import sinks
+
+    rows = [
+        (f"p{i % 3}", f"ind {i % 7}", code, 2000 + i % 20, ("Total", "Female")[i % 2],
+         float(i), None)
+        for i, code in enumerate(["FRA", "DEU", "ALB", "USA"] * 50)
+    ]
+    obs = spark.createDataFrame(rows, validation.DATA_SCHEMA)
+    country = spark.createDataFrame(
+        [(8, "AL", "ALB", "Albania"), (250, "FR", "FRA", "France"),
+         (276, "DE", "DEU", "Germany"), (840, "US", "USA", "United States")],
+        "id int, iso_2 string, iso_3 string, name string",
+    )
+    root = str(tmp_path / "star")
+    for name, table in database.build_star_schema(obs, country).items():
+        sinks.write_dataset(table, root, name, folder="star", version="v00-01-01")
+    view = database.observation_view(
+        {
+            name: spark.read.parquet(f"{root}/v00-01-01/star/{name}.parquet")
+            for name in ("country", "indicator", "dimension", "series")
+        }
+    )
+
+    def jobs(group, query):
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup(group, group)
+            result = query()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(_jobs_in(sc, group)), result
+
+    n, point = jobs(
+        "view-point",
+        lambda: view.filter(
+            (F.col("country_code_3") == "FRA") & F.col("year").between(2004, 2008)
+        )
+        .select("indicator_name", "dimension_name", "year", "value")
+        .collect(),
+    )
+    assert n == 1
+    assert len(point) == sum(r[2] == "FRA" and 2004 <= r[3] <= 2008 for r in rows)
+    n, scan = jobs(
+        "view-scan",
+        lambda: view.filter(F.col("indicator_name") == "ind 3")
+        .groupBy("year")
+        .agg(F.count("value").alias("n"))
+        .collect(),
+    )
+    assert n <= 2
+    assert sum(r["n"] for r in scan) == sum(r[1] == "ind 3" for r in rows)
