@@ -92,14 +92,19 @@ def series_fact(
     map literal folded into the plan (``_id_lookup``), and a row keeps
     only when all three ids are found: the inner join's semantics, with
     no join, broadcast or shuffle — the fact is one scan.
+
+    The ids come out of an ``inline`` generator, so the non-null filter
+    stays above them: over a plain projection Catalyst would push the
+    filter below it and run every lookup twice.
     """
-    return obs.select(
+    ids = F.struct(
         _id_lookup(obs["country_code"], country).alias("country_id"),
         _id_lookup(obs["indicator_name"], indicator).alias("indicator_id"),
         _id_lookup(obs["dimension"], dimension).alias("dimension_id"),
         F.col("year").cast("int").alias("year"),
         F.col("value").cast("double").alias("value"),
-    ).where(
+    )
+    return obs.select(F.inline(F.array(ids))).where(
         F.col("country_id").isNotNull()
         & F.col("indicator_id").isNotNull()
         & F.col("dimension_id").isNotNull()

@@ -9,9 +9,11 @@ transformer base classes). Differences are deliberate:
   read of bulk files), not a pandas frame; HTTP APIs are fetched on
   the driver (they're small control-plane data) behind an import guard
   since the harness ships no HTTP client and no network.
-- the Transformer's final step *splits* invalid rows to quarantine
-  instead of raising (``validation.validate_split``) — at scale a bad
-  record must not abort the job.
+- the Transformer's final step *conforms* rows to the canonical schema
+  (``validation.conform``: canonical columns, casts, trims; no row is
+  dropped) instead of validating-or-raising. The checks are
+  ``validation.validate_split``, which splits invalid rows to
+  quarantine and runs only when a caller calls it.
 - ``load`` writes a versioned parquet **directory** via
   ``sources.sinks.write_dataset`` and hands back that dataset, so the
   source transform runs once per refresh however many consumers follow.
@@ -77,21 +79,17 @@ class PipelineSettings:
 
     year_min: int = 2005
     year_max: int = 2030
-    http_timeout: float = 30.0
 
     @classmethod
     def from_env(cls) -> "PipelineSettings":
         """Environment-driven construction (the reference's
-        pydantic-settings layer, `settings.py:35-52`): PIPELINE_YEAR_MIN,
-        PIPELINE_YEAR_MAX, PIPELINE_HTTP_TIMEOUT override the defaults."""
+        pydantic-settings layer, `settings.py:35-52`): PIPELINE_YEAR_MIN
+        and PIPELINE_YEAR_MAX override the defaults."""
         import os
 
         return cls(
             year_min=int(os.environ.get("PIPELINE_YEAR_MIN", cls.year_min)),
             year_max=int(os.environ.get("PIPELINE_YEAR_MAX", cls.year_max)),
-            http_timeout=float(
-                os.environ.get("PIPELINE_HTTP_TIMEOUT", cls.http_timeout)
-            ),
         )
 
 
@@ -226,9 +224,10 @@ class BaseTransformer(ABC):
     ``__call__`` applies the source-specific ``transform`` then the
     shared chain: provider stamp → M49 membership filter (broadcast
     left-semi on the country dim) → schema conformance. The reference
-    validates-or-raises; here invalid rows are dropped at ``__call__``
-    level via conformance, with ``validate_split`` available for
-    quarantine flows.
+    validates-or-raises; here ``__call__`` neither raises nor drops a
+    row for failing a check (conformance only projects, casts and
+    trims), and ``validation.validate_split`` quarantines invalid rows
+    only when a caller calls it.
     """
 
     @abstractmethod

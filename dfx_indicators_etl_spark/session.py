@@ -28,8 +28,9 @@ RUNTIME_CONFS: dict[str, str] = {
     # nano-epoch longs (readers convert to µs, DuckDB-style truncation)
     # instead of failing with PARQUET_TYPE_ILLEGAL.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Wrap-around 64-bit arithmetic + permissive coercions (the
-    # reference's pandas semantics); Spark 4 defaults ANSI on.
+    # Wrap-around 64-bit arithmetic (MinHash permutations rely on it) +
+    # permissive coercions (the reference's pandas semantics); Spark 4
+    # defaults ANSI on.
     "spark.sql.ansi.enabled": "false",
     # Oracle parity: DuckDB hashes timestamps in UTC.
     "spark.sql.session.timeZone": "UTC",
@@ -79,20 +80,13 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        # Determinism / oracle parity. ANSI off restores wrap-around
-        # 64-bit arithmetic (MinHash permutations rely on it) and the
-        # permissive coercions the reference's pandas transforms assume.
-        .config("spark.sql.ansi.enabled", "false")
+        # The confs every plan assumes (ANSI off, UTC, rebase, nanos,
+        # Arrow), as ``ensure_session_confs`` sets them on any session.
+        .config(map=RUNTIME_CONFS)
         # Case-sensitive resolution: source payloads legitimately carry
         # e.g. both `Indicator` and `INDICATOR` (UNICEF SDMX), which the
         # reference's pandas handles case-sensitively.
         .config("spark.sql.caseSensitive", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # Parquet TIMESTAMP(NANOS) columns surface as nano-epoch longs
-        # (readers convert to µs timestamps, matching DuckDB's ns→µs
-        # truncation) instead of failing the scan.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Adaptive execution: runtime coalesce, skew-join splitting,
         # runtime broadcast conversion — the main lever that lets the
         # same plan run at sf0.001 and at 100 TB.
@@ -100,8 +94,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for every pandas exchange (mapInPandas / pandas_udf).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Dimension tables broadcast; 64 MB covers every dim at bench SF
         # while staying executor-memory-safe on a cluster.

@@ -152,10 +152,13 @@ def read_csv(
     schema: T.StructType | str | None = None,
     **options: str,
 ) -> DataFrame:
-    """CSV reader with an explicit schema by default.
+    """CSV reader (header row on): with ``schema`` the columns are typed
+    as given; without it ``inferSchema`` is on.
 
-    Schema inference triggers an extra full scan — never acceptable on a
-    large input — so callers pass a schema; ``inferSchema`` is opt-in.
+    Inference costs an extra full scan, so a large input should pass a
+    schema. Callers that rely on inferred types (``world_bank_wdi``;
+    ``unstats_sdg_database`` matches M49 codes on their inferred integer
+    form) pass none.
     """
     ensure_session_confs(spark)
     reader = spark.read.options(header="true", **options)

@@ -12,7 +12,12 @@ picks local vs Azure from the environment) as Spark writers:
 - the Azure backend needs the ``hadoop-azure`` jars + account config;
   like the reference it is selected by environment, and it is stubbed
   out with a clear error when the ABFS connector isn't on the
-  classpath (no cloud creds in this harness).
+  classpath.
+- the relational load layer (reference `database/__init__.py:60-127`)
+  is ``write_jdbc`` plus one upsert, ``jdbc_upsert``: a staging-table
+  bulk load and ONE ``INSERT … ON CONFLICT`` / ``MERGE`` statement
+  (``upsert_sql``), so the database resolves conflicts and the target
+  table is never dropped or rewritten.
 """
 
 from __future__ import annotations
@@ -33,7 +38,6 @@ __all__ = [
     "read_jdbc",
     "jdbc_table_exists",
     "jdbc_upsert",
-    "jdbc_upsert_statement",
     "jdbc_execute",
     "jdbc_dialect",
     "upsert_sql",
@@ -185,16 +189,26 @@ def compact_dataset(
     footer overhead dominating). Rewrites via a staging directory then
     swaps — a real deployment gets this atomically from a table format
     (Delta/Iceberg ``OPTIMIZE``); the rewrite plan is identical.
-    Returns the file count after compaction.
+    The swap moves the live copy aside, renames the staging copy in and
+    only then deletes the old copy; if renaming the staging copy in
+    fails, the old copy is renamed back, so ``path`` always holds a
+    complete dataset. Returns the file count after compaction.
     """
     import shutil
 
     staging = f"{path}__compacting"
+    retired = f"{path}__retired"
     spark.read.parquet(path).repartition(target_partitions).write.mode(
         "overwrite"
     ).parquet(staging)
-    shutil.rmtree(path)
-    os.rename(staging, path)
+    shutil.rmtree(retired, ignore_errors=True)  # left by an interrupted swap
+    os.rename(path, retired)
+    try:
+        os.rename(staging, path)
+    except BaseException:
+        os.rename(retired, path)
+        raise
+    shutil.rmtree(retired)
     return len(
         [f for f in os.listdir(path) if f.endswith(".parquet")]
     )
@@ -399,7 +413,7 @@ def jdbc_execute(
         conn.close()
 
 
-def jdbc_upsert_statement(
+def jdbc_upsert(
     df: DataFrame,
     url: str,
     table: str,
@@ -408,21 +422,36 @@ def jdbc_upsert_statement(
     insert_only: bool = False,
     **options: str,
 ) -> None:
-    """Set-based upsert: bulk-load a staging table, run ONE dialect-
-    correct conflict statement (``upsert_sql``), drop the staging.
+    """Upsert/insert-ignore into a JDBC table (reference
+    ``update_on_conflict`` / ``ignore_on_conflict``,
+    `database/__init__.py:92-127`): bulk-load a staging table, run ONE
+    dialect-correct conflict statement (``upsert_sql``), drop the
+    staging table.
 
-    The scale path next to ``jdbc_upsert``'s portable
-    read-merge-overwrite: the target table is never read back or
-    rewritten — executors stream only the incoming rows, and the
-    database applies the merge set-wise. Derby-tested; the postgresql
-    branch emits the reference's ON CONFLICT dialect.
+    The target is never read back or rewritten: executors stream only
+    the incoming rows, and the database applies the merge set-wise in
+    one statement. So the target keeps its DDL (keys, constraints,
+    grants), and a load that fails (in the staging write or in the
+    statement) leaves its rows as they were; the staging table is
+    dropped either way. Derby-tested; the postgresql branch emits the
+    reference's ON CONFLICT dialect, every other URL a MERGE (which
+    MySQL and SQLite do not accept). Column identifiers are quoted, so
+    the target's columns must carry the incoming frame's names exactly
+    (as the tables Spark's JDBC writer creates do). Key columns must be
+    comparable in the database: Spark's writer types Derby strings as
+    CLOB, so a string key there needs ``createTableColumnTypes`` (e.g.
+    ``"code VARCHAR(64)"``) among ``options``.
 
-    The staging load is key-deduped first (keep-first on ``key_cols``
-    in ``df`` order): both conflict dialects require the source to be
-    key-unique — Postgres aborts with "ON CONFLICT DO UPDATE command
-    cannot affect row a second time", MERGE with a cardinality
-    violation (ADVICE r6). ``options`` are connection/writer properties
-    (``user``, ``password``, …) forwarded to every leg.
+    The staging load is key-deduped first (per key, the first row in
+    ascending order of the non-key columns): both conflict dialects
+    require the source to be key-unique — Postgres aborts with "ON
+    CONFLICT DO UPDATE command cannot affect row a second time", MERGE
+    with a cardinality violation. ``options`` are connection/writer
+    properties (``user``, ``password``, …) forwarded to every leg.
+
+    Table absence is decided by an explicit metadata probe
+    (``jdbc_table_exists``), never by catching a failed call, so a
+    transient connection error against an existing table raises.
     """
     from ..operators.indicator import dedup_first
 
@@ -437,8 +466,8 @@ def jdbc_upsert_statement(
     if not jdbc_table_exists(spark, url, table, driver=driver, **options):
         write_jdbc(df, url, table, mode="overwrite", driver=driver, **options)
         return
-    write_jdbc(df, url, staging, mode="overwrite", driver=driver, **options)
     try:
+        write_jdbc(df, url, staging, mode="overwrite", driver=driver, **options)
         jdbc_execute(
             spark,
             url,
@@ -454,60 +483,12 @@ def jdbc_upsert_statement(
             **options,
         )
     finally:
-        jdbc_execute(
-            spark, url, f"DROP TABLE {staging}", driver=driver, **options
-        )
-
-
-def jdbc_upsert(
-    df: DataFrame,
-    url: str,
-    table: str,
-    key_cols: tuple[str, ...],
-    driver: str | None = None,
-    insert_only: bool = False,
-    **options: str,
-) -> None:
-    """Upsert/insert-ignore into a JDBC table (reference
-    ``update_on_conflict`` / ``ignore_on_conflict``,
-    `database/__init__.py:92-127`). ``options`` are connection/reader/
-    writer properties (``user``, ``password``, …) forwarded to every leg.
-
-    Plain JDBC has no portable MERGE, so this reads the existing table,
-    merges key-wise with the engine's DataFrame merge operators, and
-    overwrites. The existing rows are eagerly localCheckpoint-ed first:
-    overwrite truncates the table *before* a lazy read would re-scan
-    it, which would otherwise merge against an already-empty table.
-
-    Table absence is decided by an explicit metadata probe
-    (``jdbc_table_exists``), never by catching a failed read: treating
-    any read exception as "absent" would let a transient failure (auth,
-    network, DB briefly down) against an EXISTING table fall through to
-    overwrite-with-incoming-only — silently destroying every previously
-    loaded row. Transient errors now propagate to the caller.
-    """
-    from ..operators.indicator import insert_ignore, upsert
-
-    spark = df.sparkSession
-    if not jdbc_table_exists(spark, url, table, driver=driver, **options):
-        write_jdbc(df, url, table, mode="overwrite", driver=driver, **options)
-        return
-    existing = read_jdbc(
-        spark, url, table, driver=driver, **options
-    ).localCheckpoint(eager=True)
-    # Databases fold identifier case (Derby → upper); align the read
-    # table's columns back to the incoming frame's names so the
-    # (case-sensitive) merge sees one schema.
-    by_fold = {c.lower(): c for c in df.columns}
-    existing = existing.select(
-        *[
-            existing[c].alias(by_fold.get(c.lower(), c))
-            for c in existing.columns
-        ]
-    )
-    merge = insert_ignore if insert_only else upsert
-    merged = merge(existing, df, list(key_cols))
-    write_jdbc(merged, url, table, mode="overwrite", driver=driver, **options)
+        # A staging write that failed before creating the table leaves
+        # nothing to drop; probing first keeps its error the one raised.
+        if jdbc_table_exists(spark, url, staging, driver=driver, **options):
+            jdbc_execute(
+                spark, url, f"DROP TABLE {staging}", driver=driver, **options
+            )
 
 
 def write_bucketed_table(

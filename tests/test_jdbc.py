@@ -148,12 +148,15 @@ def test_streaming_foreachbatch_jdbc_upsert(spark, derby_url, tmp_path):
     agg = streaming.windowed_event_counts(stream, window="1 hour", watermark="2 hours")
 
     def land(batch_df, batch_id):
+        # Spark creates Derby string columns as CLOB, which Derby cannot
+        # compare; the MERGE's ON clause needs a comparable key type.
         sinks.jdbc_upsert(
             batch_df,
             derby_url,
             "served",
             key_cols=("window_start", "event_type"),
             driver=DRIVER,
+            createTableColumnTypes="event_type VARCHAR(64)",
         )
 
     q = (
@@ -237,19 +240,15 @@ def test_upsert_sql_merge_insert_only_has_no_update_clause():
 
 
 def test_jdbc_upsert_statement_merges_on_derby(spark, derby_url, base_rows):
-    """The staging-statement path executes end-to-end on Derby: the
+    """The staging-statement upsert executes end-to-end on Derby: the
     target is never read back or rewritten, the MERGE resolves
     conflicts set-wise in the database."""
-    sinks.jdbc_upsert_statement(
-        base_rows, derby_url, "mobs", ("id",), driver=DRIVER
-    )
+    sinks.jdbc_upsert(base_rows, derby_url, "mobs", ("id",), driver=DRIVER)
     incoming = spark.createDataFrame(
         [(2, "BETA", 99.0), (4, "delta", 40.0)],
         "id bigint, name string, value double",
     )
-    sinks.jdbc_upsert_statement(
-        incoming, derby_url, "mobs", ("id",), driver=DRIVER
-    )
+    sinks.jdbc_upsert(incoming, derby_url, "mobs", ("id",), driver=DRIVER)
     back = sinks.read_jdbc(spark, derby_url, "mobs", driver=DRIVER)
     assert sorted((r.id, r.name, r.value) for r in back.collect()) == [
         (1, "alpha", 10.0),
@@ -262,14 +261,12 @@ def test_jdbc_upsert_statement_merges_on_derby(spark, derby_url, base_rows):
 
 
 def test_jdbc_upsert_statement_insert_only_on_derby(spark, derby_url, base_rows):
-    sinks.jdbc_upsert_statement(
-        base_rows, derby_url, "iobs", ("id",), driver=DRIVER
-    )
+    sinks.jdbc_upsert(base_rows, derby_url, "iobs", ("id",), driver=DRIVER)
     incoming = spark.createDataFrame(
         [(2, "BETA", 99.0), (4, "delta", 40.0)],
         "id bigint, name string, value double",
     )
-    sinks.jdbc_upsert_statement(
+    sinks.jdbc_upsert(
         incoming, derby_url, "iobs", ("id",), driver=DRIVER, insert_only=True
     )
     back = sinks.read_jdbc(spark, derby_url, "iobs", driver=DRIVER)
@@ -279,22 +276,19 @@ def test_jdbc_upsert_statement_insert_only_on_derby(spark, derby_url, base_rows)
         (3, "gamma"),
         (4, "delta"),  # new key inserted
     ]
+    assert not sinks.jdbc_table_exists(spark, derby_url, "iobs__stage", driver=DRIVER)
 
 
-def test_jdbc_upsert_statement_dedupes_staging(spark, derby_url, base_rows):
+def test_jdbc_upsert_dedupes_staging(spark, derby_url, base_rows):
     """Duplicate keys in the incoming frame must not abort the MERGE
     (cardinality violation) / ON CONFLICT (affect-row-twice): the
-    staging load is key-deduped deterministically first (ADVICE r6)."""
-    sinks.jdbc_upsert_statement(
-        base_rows, derby_url, "dobs", ("id",), driver=DRIVER
-    )
+    staging load is key-deduped deterministically first."""
+    sinks.jdbc_upsert(base_rows, derby_url, "dobs", ("id",), driver=DRIVER)
     incoming = spark.createDataFrame(
         [(2, "BETA", 99.0), (2, "ZETA", 1.0), (4, "delta", 40.0)],
         "id bigint, name string, value double",
     )
-    sinks.jdbc_upsert_statement(
-        incoming, derby_url, "dobs", ("id",), driver=DRIVER
-    )
+    sinks.jdbc_upsert(incoming, derby_url, "dobs", ("id",), driver=DRIVER)
     back = sinks.read_jdbc(spark, derby_url, "dobs", driver=DRIVER)
     assert sorted((r.id, r.name, r.value) for r in back.collect()) == [
         (1, "alpha", 10.0),
@@ -304,12 +298,74 @@ def test_jdbc_upsert_statement_dedupes_staging(spark, derby_url, base_rows):
     ]
 
 
+def test_jdbc_upsert_failure_leaves_target_unchanged(spark, derby_url, base_rows):
+    """An incoming frame that raises mid-load must not touch the target:
+    the staging write fails before the conflict statement runs, so no
+    row is updated or lost, and the staging table is dropped."""
+    from pyspark.sql import functions as F
+
+    sinks.jdbc_upsert(base_rows, derby_url, "fobs", ("id",), driver=DRIVER)
+    incoming = spark.createDataFrame(
+        [(2, "BETA", 99.0), (4, "delta", 40.0)],
+        "id bigint, name string, value double",
+    ).withColumn(
+        "name",
+        F.when(F.col("id") == 4, F.raise_error(F.lit("bad row"))).otherwise(
+            F.col("name")
+        ),
+    )
+    with pytest.raises(Exception, match="bad row"):
+        sinks.jdbc_upsert(incoming, derby_url, "fobs", ("id",), driver=DRIVER)
+    back = sinks.read_jdbc(spark, derby_url, "fobs", driver=DRIVER)
+    assert sorted((r.id, r.name, r.value) for r in back.collect()) == [
+        (1, "alpha", 10.0),
+        (2, "beta", 20.0),
+        (3, "gamma", 30.0),
+    ]
+    assert not sinks.jdbc_table_exists(spark, derby_url, "fobs__stage", driver=DRIVER)
+
+
+def test_jdbc_upsert_keeps_target_primary_key(spark, derby_url, base_rows):
+    """A target created by DDL keeps its primary key across upserts: the
+    table is merged into, never dropped and re-created."""
+    sinks.jdbc_execute(
+        spark,
+        derby_url,
+        'CREATE TABLE pobs ("id" BIGINT NOT NULL PRIMARY KEY, '
+        '"name" VARCHAR(32), "value" DOUBLE)',
+        driver=DRIVER,
+    )
+    sinks.jdbc_upsert(base_rows, derby_url, "pobs", ("id",), driver=DRIVER)
+    incoming = spark.createDataFrame(
+        [(2, "BETA", 99.0), (4, "delta", 40.0)],
+        "id bigint, name string, value double",
+    )
+    sinks.jdbc_upsert(incoming, derby_url, "pobs", ("id",), driver=DRIVER)
+    back = sinks.read_jdbc(spark, derby_url, "pobs", driver=DRIVER)
+    assert sorted((r.id, r.name, r.value) for r in back.collect()) == [
+        (1, "alpha", 10.0),
+        (2, "BETA", 99.0),
+        (3, "gamma", 30.0),
+        (4, "delta", 40.0),
+    ]
+    conn = sinks._jdbc_connection(spark, derby_url)
+    try:
+        rs = conn.getMetaData().getPrimaryKeys(None, None, "POBS")
+        keys = []
+        while rs.next():
+            keys.append(rs.getString("COLUMN_NAME"))
+        rs.close()
+    finally:
+        conn.close()
+    assert keys == ["id"]
+
+
 def test_jdbc_connection_options_travel_as_properties(spark, derby_url, base_rows):
     """user/password reach DriverManager as a Properties object (not
     silently dropped): Derby without auth accepts and ignores them, so
     the whole options-forwarding path runs end-to-end (ADVICE r6)."""
     creds = {"user": "app", "password": "secret"}
-    sinks.jdbc_upsert_statement(
+    sinks.jdbc_upsert(
         base_rows, derby_url, "cobs", ("id",), driver=DRIVER, **creds
     )
     assert sinks.jdbc_table_exists(

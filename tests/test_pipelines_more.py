@@ -202,10 +202,8 @@ def test_pipeline_settings_from_env(monkeypatch):
 
     assert PipelineSettings.from_env() == PipelineSettings()
     monkeypatch.setenv("PIPELINE_YEAR_MIN", "1990")
-    monkeypatch.setenv("PIPELINE_HTTP_TIMEOUT", "5.5")
     got = PipelineSettings.from_env()
     assert got.year_min == 1990 and got.year_max == 2030
-    assert got.http_timeout == 5.5
 
 
 def test_union_all_balanced_tree(spark):

@@ -158,6 +158,26 @@ def test_fact_matches_inner_join_on_edge_keys(spark):
     assert got == [(0, 1, 1, 2000, 1.0), (4, 2, 1, 2002, 3.0), (894, 2, 2, 2001, 2.0)]
 
 
+def test_fact_looks_each_id_up_once(spark, tmp_path):
+    """Three ids cost three map lookups: the non-null filter must not be
+    pushed below the lookups and evaluate each a second time. The input
+    is a parquet scan, as in the star build (a local relation would fold
+    the whole fact into a literal table)."""
+    path = str(tmp_path / "obs")
+    spark.createDataFrame(
+        pa.Table.from_pylist(
+            [{"country_code": "FRA", "indicator_name": "gdp", "dimension": "Total",
+              "year": 2000, "value": 1.0}],
+            OBS,
+        )
+    ).write.parquet(path)
+    obs = spark.read.parquet(path)
+    fact = database.series_fact(obs, {"FRA": 250}, {"gdp": 1}, {"Total": 1})
+    plan = fact._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("element_at(") == 3, plan
+    assert fact.collect() == [(250, 1, 1, 2000, 1.0)]
+
+
 ID_SETS = st.sets(st.integers(0, 900), max_size=5)
 NAME = st.sampled_from(NAMES)
 VALUE = st.integers(-1000, 1000).map(float)

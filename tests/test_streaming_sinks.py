@@ -322,6 +322,27 @@ def test_compact_dataset(spark, sf_dir, tmp_path):
     assert spark.read.parquet(path).count() == n_rows
 
 
+def test_compact_dataset_failed_swap_keeps_live_copy(spark, tmp_path, monkeypatch):
+    """A swap that fails to rename the compacted copy in must leave the
+    live dataset readable at its path, with every row."""
+    import os
+
+    path = str(tmp_path / "frag")
+    spark.range(100).repartition(8).write.parquet(path)
+    rename = os.rename
+
+    def failing_rename(src, dst):
+        if str(src).endswith("__compacting"):
+            raise OSError("rename failed")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="rename failed"):
+        sinks.compact_dataset(spark, path, target_partitions=2)
+    monkeypatch.setattr(os, "rename", rename)
+    assert spark.read.parquet(path).count() == 100
+
+
 def test_windowed_agg_invariant_across_micro_batches(spark, sf_dir, tmp_path):
     """The same windowed plan must produce identical results whether the
     backlog drains in ONE batch or file-by-file (maxFilesPerTrigger=1) —
