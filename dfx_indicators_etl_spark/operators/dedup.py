@@ -44,7 +44,6 @@ __all__ = [
     "simhash_portable",
     "simhash_pairs_portable",
     "connected_components",
-    "connected_components_star",
 ]
 
 
@@ -1221,122 +1220,3 @@ def fuzzy_levenshtein_pairs(
         )
     )
 
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    operations (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the published shuffle-bounded alternative to
-    min-label propagation (``connected_components``).
-
-    Why a second algorithm: label propagation shuffles a |V|-row label
-    table against the edge list every round and needs the pointer-jump
-    join to stay O(log d); star contraction instead REWRITES the edge
-    list toward a star forest — per round one min-aggregate keyed by
-    node plus one join keyed by node, edge count non-increasing after
-    dedup, and O(log n) rounds with high probability. On graphs whose
-    components are deep (long chains — lineage graphs, time-adjacent
-    near-dup chains) the edge rewrites converge with strictly smaller
-    shuffle volume than carrying the full label table; on shallow
-    near-dup graphs both are cheap. The engine offers both; results
-    are identical (pytest-pinned on chains, cliques, random graphs).
-
-    Mechanics per round (all DataFrame ops, no driver state):
-
-    - large-star: for each node u with undirected neighborhood N(u),
-      every neighbor v > u re-attaches to m(u) = min(N(u) ∪ {u});
-    - small-star: edges oriented (big, small); every small-side
-      neighbor (and u itself) re-attaches to the minimum.
-
-    Both preserve connectivity and strictly reduce non-star structure;
-    at the fixed point every edge is (node → component minimum).
-    Convergence is detected by an edge-multiset checksum (count +
-    xxhash sum — two control-plane scalars per round, the same probe
-    budget as ``connected_components``). Raises ``RuntimeError`` if
-    the loop exits unconverged — partial stars are wrong labels.
-
-    Returns ``(doc_id, cluster_id)`` with cluster_id = component min,
-    singletons (nodes with no pairs) absent — identical contract to
-    ``connected_components``.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _checksum(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = und.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            und.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # orient every edge (big -> small)
-        o = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("m"))  # m < u always
-        neigh = o.join(m, "u").select(
-            F.col("v").alias("node"), F.col("m").alias("label"), "u"
-        )
-        re_small = neigh.select(F.col("node").alias("u"), F.col("label").alias("v"))
-        re_self = neigh.select(F.col("u"), F.col("label").alias("v")).distinct()
-        return (
-            re_small.union(re_self)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    prev = _checksum(edges)
-    for _ in range(max_iterations):
-        # One materialization per round, not one per star (r15, guide
-        # §1.2): small-star references the large-star output twice
-        # (groupBy + join), but both references need the same hash
-        # partitioning, and the executed AQE plan resolves the repeated
-        # subtree to ReusedExchange nodes (verified: 5 per fused round)
-        # instead of recomputing it — so executing the fused round is
-        # ONE job where checkpointing each star separately was two.
-        # Measured on the CC consumers (min-of-2, same host/protocol):
-        # emb_cosine_clusters 13.0→7.9 s, mm_phash_clusters 7.8→4.9 s,
-        # dedup_clusters 4.0→2.8 s, dedup_cc_largestar 5.7→3.6 s.
-        # Results are unchanged (same algebra per round, checksum-based
-        # convergence unchanged; the star-contraction identity tests
-        # pin equality with connected_components).
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        cur = _checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in "
-            f"{max_iterations} iterations"
-        )
-    # fixed point: every edge is (node -> component min); roots appear
-    # only on the v side
-    members = edges.select(
-        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
-    )
-    roots = edges.select(F.col("v").alias("doc_id")).distinct().select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    )
-    return members.union(roots)

@@ -308,34 +308,27 @@ def _cms_h1_h2(key: Column) -> tuple[Column, Column]:
     )
 
 
-def _cms_buckets(keyed: DataFrame, key_col: str, depth: int, width: int, hash_family: str) -> DataFrame:
-    """One ``(i, bucket)`` row per key occurrence × depth (plus any
-    carried columns). ``portable``: h1/h2 computed ONCE per occurrence
-    BEFORE the depth explode, rows i derive by integer arithmetic
-    ``(h1 + i·h2) mod P mod width`` (Carter–Wegman); ``xxhash64``: one
-    seeded intrinsic per (occurrence, i)."""
+def _cms_buckets(keyed: DataFrame, key_col: str, depth: int, width: int) -> DataFrame:
+    """One ``(key, i, bucket)`` row per key occurrence × depth: h1/h2
+    computed ONCE per occurrence BEFORE the depth explode, rows i
+    derive by integer arithmetic ``(h1 + i·h2) mod P mod width``
+    (Carter–Wegman). A consumer that drops the key column lets the
+    optimizer prune it from every projection."""
     i = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("i")
-    if hash_family == "xxhash64":
-        return keyed.select(F.col(key_col).alias("__k"), i).select(
+    h1, h2 = _cms_h1_h2(F.col(key_col))
+    return (
+        keyed.select(key_col, h1.alias("__h1"), h2.alias("__h2"))
+        .select(key_col, "__h1", "__h2", i)
+        .select(
+            key_col,
             "i",
-            F.pmod(F.xxhash64("__k", "i"), F.lit(width)).alias("bucket"),
+            F.pmod(
+                (F.col("__h1") + F.col("i") * F.col("__h2"))
+                % F.lit(CMS_PRIME),
+                F.lit(width),
+            ).alias("bucket"),
         )
-    if hash_family == "portable":
-        h1, h2 = _cms_h1_h2(F.col(key_col))
-        return (
-            keyed.select(h1.alias("__h1"), h2.alias("__h2"))
-            .select("__h1", "__h2", i)
-            .select(
-                "i",
-                F.pmod(
-                    (F.col("__h1") + F.col("i") * F.col("__h2"))
-                    % F.lit(CMS_PRIME),
-                    F.lit(width),
-                ).alias("bucket"),
-            )
-        )
-    # fail loudly: a typo must not silently change the sketch
-    raise ValueError(f"unknown hash_family: {hash_family!r}")
+    )
 
 
 def cms_sketch(
@@ -343,7 +336,6 @@ def cms_sketch(
     key_col: str = "word",
     depth: int = 4,
     width: int = 4096,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Count-min sketch of a key stream as a ``(i, bucket, c)`` cell
     table — the MERGEABLE frequency sketch for unbounded key domains
@@ -361,16 +353,12 @@ def cms_sketch(
     ``true(x) + 2N/width`` with probability ≤ 2^-depth (Cormode &
     Muthukrishnan 2005, public construction).
 
-    Two hash families, the ``hashed_ngram_features`` split: the
-    ``portable`` default is the md5 pair-hash ``(h1 + i·h2) mod P mod
-    width`` — replayable bit-for-bit in ANSI SQL, so the WHOLE sketch
-    (and the estimates derived from it) is value-oracled, not just
-    rows-only; ``xxhash64`` is the production fast path (one codegen
-    intrinsic per cell), shape-pinned against the portable face in
-    pytest.
+    The hash is the md5 pair-hash ``(h1 + i·h2) mod P mod width`` —
+    replayable bit-for-bit in ANSI SQL, so the WHOLE sketch (and the
+    estimates derived from it) is value-oracled, not just rows-only.
     """
     return (
-        _cms_buckets(keyed, key_col, depth, width, hash_family)
+        _cms_buckets(keyed, key_col, depth, width)
         .groupBy("i", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -384,7 +372,6 @@ def cms_heavy_hitters(
     width: int = 4096,
     top_k: int = 20,
     candidate_permille: int = 50,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Top-``top_k`` token heavy hitters estimated from a count-min
     sketch — the batch face of the classic sketch + candidate-stream
@@ -400,53 +387,23 @@ def cms_heavy_hitters(
     table is bounded, never shuffles the candidates), ``min`` over
     the ``depth`` rows, and a TakeOrdered top-k. No exact per-key
     count ever shuffles the unbounded key domain. Sampling salt is
-    (doc, position, token) hashed by the same family as the sketch,
-    so the whole construction is deterministic — and under the
-    ``portable`` md5 family it is replayable in ANSI SQL end-to-end,
-    so the registered key carries a FULL value oracle (estimate vs
-    TRUTH accuracy stays pytest-gated, tests/test_round14_ops.py).
+    (doc, position, token) hashed by the same md5 pair-hash as the
+    sketch, so the whole construction is deterministic and replayable
+    in ANSI SQL end-to-end: the registered key carries a FULL value
+    oracle (estimate vs TRUTH accuracy stays pytest-gated,
+    tests/test_round14_ops.py).
     """
     toks = df.select(
         F.col(id_col).alias("__doc"),
         F.posexplode(tokens(text_col)).alias("__pos", "word"),
     )
-    sketch = cms_sketch(
-        toks, "word", depth=depth, width=width, hash_family=hash_family
-    )
+    sketch = cms_sketch(toks, "word", depth=depth, width=width)
     salt = F.concat_ws(":", "__doc", "__pos", "word")
-    if hash_family == "xxhash64":
-        samp = F.pmod(F.xxhash64("__doc", "__pos", "word"), F.lit(1000))
-    elif hash_family == "portable":
-        samp = F.pmod(_cms_h1_h2(salt)[0], F.lit(1000))
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    samp = F.pmod(_cms_h1_h2(salt)[0], F.lit(1000))
     candidates = (
         toks.where(samp < F.lit(candidate_permille)).select("word").distinct()
     )
-    # candidate buckets must CARRY the word through the depth explode
-    # (so this inlines _cms_buckets' arithmetic with `word` retained)
-    i = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("i")
-    if hash_family == "xxhash64":
-        cand_cells = candidates.select("word", i).select(
-            "word",
-            "i",
-            F.pmod(F.xxhash64("word", "i"), F.lit(width)).alias("bucket"),
-        )
-    else:
-        h1, h2 = _cms_h1_h2(F.col("word"))
-        cand_cells = (
-            candidates.select("word", h1.alias("__h1"), h2.alias("__h2"))
-            .select("word", "__h1", "__h2", i)
-            .select(
-                "word",
-                "i",
-                F.pmod(
-                    (F.col("__h1") + F.col("i") * F.col("__h2"))
-                    % F.lit(CMS_PRIME),
-                    F.lit(width),
-                ).alias("bucket"),
-            )
-        )
+    cand_cells = _cms_buckets(candidates, "word", depth, width)
     est = (
         cand_cells.join(F.broadcast(sketch), ["i", "bucket"], "left")
         .groupBy("word")
@@ -980,31 +937,18 @@ def hashed_ngram_features(
     df: DataFrame,
     text_col: str = "text",
     n_features: int = 1024,
-    hash_family: str = "portable",
 ) -> DataFrame:
     """Feature-hashing (hashing-trick) BIGRAM counts per document —
     the fastText/Vowpal-style sparse featurizer a training pipeline
     runs before a linear quality/language classifier (r12).
 
-    Two hash families, the same deliberate split the minhash family
-    documents (operators/dedup.py module docstring):
+    Each whitespace bigram maps to ``portable_hash(gram) mod
+    n_features`` — the md5-hex-slice hash (``conv(substring(md5(g), 1,
+    8), 16, 10)``), bit-identical in ANSI SQL, so the whole
+    featurization is value-oracled.
 
-    - ``"portable"`` (default; the oracled registry face): each
-      whitespace bigram maps to ``portable_hash(gram) mod n_features``
-      — the md5-hex-slice hash (``conv(substring(md5(g), 1, 8), 16,
-      10)``), bit-identical in ANSI SQL, so the whole featurization is
-      value-oracled.
-    - ``"xxhash64"`` (the production fast path, r13): ``pmod(
-      xxhash64(gram), n_features)`` — one JVM codegen intrinsic
-      instead of an md5 digest + hex conv per gram. Measured at
-      sf0.1: 1.28× end-to-end (4.15 → 3.25 s min-of-3) — the hash is
-      ~22% of the operator's cost; explode + the map-combinable
-      groupBy dominate (SCALE.md §round-13). Engine-specific, so not
-      SQL-oracled; a pytest pin asserts its feature distribution and
-      collision statistics match the portable key's shape.
-
-    Either way the output is the sparse COO form ``(doc_id, feature,
-    n)``: per-doc rows ≤ min(n_bigrams, n_features), the groupBy is
+    The output is the sparse COO form ``(doc_id, feature, n)``:
+    per-doc rows ≤ min(n_bigrams, n_features), the groupBy is
     map-side combinable, and everything is whole-stage codegen — no
     Python, no vocabulary state (the trick's whole point: no vocab
     build pass, collisions traded for a fixed feature space).
@@ -1020,17 +964,10 @@ def hashed_ngram_features(
         ),
     ).otherwise(F.array().cast("array<string>"))
     exploded = df.select("doc_id", F.explode(grams).alias("g"))
-    if hash_family == "xxhash64":
-        feature = F.pmod(F.xxhash64(F.col("g")), F.lit(n_features))
-    elif hash_family == "portable":
-        feature = F.pmod(
-            F.conv(F.substring(F.md5(F.col("g")), 1, 8), 16, 10).cast(
-                "bigint"
-            ),
-            F.lit(n_features),
-        )
-    else:  # fail loudly: a typo must not silently change the features
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    feature = F.pmod(
+        F.conv(F.substring(F.md5(F.col("g")), 1, 8), 16, 10).cast("bigint"),
+        F.lit(n_features),
+    )
     return (
         exploded.select("doc_id", feature.alias("feature"))
         .groupBy("doc_id", "feature")

@@ -72,7 +72,6 @@ def get_pipeline(
     country_mapping=None,
     storage_root: str | None = None,
     countries=None,
-    country_key: str = "iso_alpha_3",
     settings: PipelineSettings | None = None,
     **transformer_kwargs,
 ) -> Pipeline:
@@ -100,7 +99,6 @@ def get_pipeline(
         transformer=module.Transformer(**transformer_kwargs),
         storage_root=storage_root,
         countries=countries,
-        country_key=country_key,
         settings=settings or PipelineSettings(),
     )
 
@@ -111,7 +109,6 @@ def run_all(
     storage_root: str,
     country_mapping=None,
     countries=None,
-    country_key: str = "iso_alpha_3",
     settings: PipelineSettings | None = None,
 ) -> dict:
     """The reference's etl.ipynb loop over every configured source:
@@ -139,7 +136,6 @@ def run_all(
             country_mapping=country_mapping,
             storage_root=storage_root,
             countries=countries,
-            country_key=country_key,
             settings=settings,
         )
         return pipeline.run(spark, **kwargs)

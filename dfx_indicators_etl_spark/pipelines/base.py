@@ -239,7 +239,6 @@ class BaseTransformer(ABC):
         df: DataFrame,
         provider: str,
         countries: DataFrame | None = None,
-        country_key: str = "iso_alpha_3",
         **kwargs,
     ) -> DataFrame:
         out = self.transform(df, **kwargs)
@@ -249,7 +248,7 @@ class BaseTransformer(ABC):
         # ``dimension_*`` columns / default ``Total`` before conformance.
         out = ops.combine_dimensions(out)
         if countries is not None:  # _base.py:212-218 — keep M49 areas only
-            out = ops.filter_countries(out, countries, "country_code", country_key)
+            out = ops.filter_countries(out, countries, "country_code", "iso_alpha_3")
         return validation.conform(out)
 
 
@@ -272,7 +271,6 @@ class Pipeline:
     transformer: BaseTransformer
     storage_root: str | None = None
     countries: DataFrame | None = None
-    country_key: str = "iso_alpha_3"
     settings: PipelineSettings = field(default_factory=PipelineSettings)
 
     df_raw: DataFrame | None = None
@@ -289,7 +287,6 @@ class Pipeline:
             self.df_raw,
             provider=self.retriever.provider,
             countries=self.countries,
-            country_key=self.country_key,
             **kwargs,
         )
         # _pipeline.py:98-104 — settings year window.

@@ -11,107 +11,4 @@ from . import llmdata  # noqa: E402,F401
 from . import scale_queries  # noqa: E402,F401
 from . import streaming_queries  # noqa: E402,F401
 
-# The driver's CORRECTNESS gate samples the first 50 registered queries
-# in insertion order. Round-14 rotation (VERDICT r13 #1): (a) the
-# remaining 44-key r9-evidence cohort — the committed r14 queue's
-# ordering verbatim (graph/scale/multimodal/sketch keys first, then
-# the 14-key indicator-model block); (b) keys NEW in round 14,
-# appended as they land so they never join the unstamped backlog;
-# (c) the r10-evidence cohort fills whatever window room remains —
-# everything past the 50-key boundary overflows to the r15 queue.
-_DRIVER_WINDOW_PRIORITY = [
-    # (a) the committed r14 queue's 44-key r9-evidence cohort, verbatim
-    "q_range_join",
-    "q_triangle_count",
-    "q_bfs_hops",
-    "q_cheapest_path",
-    "q_dpp_prune",
-    "q_bloom_prefilter_join",
-    "mm_video_dedup",
-    "mm_phash_dedup_256",
-    "mm_audio_landmarks",
-    "mm_scene_signatures",
-    "sink_schema_evolution",
-    "sink_orc_roundtrip",
-    "text_tfidf",
-    "text_chunk",
-    "text_pack_bins",
-    "emb_int8_quantize",
-    "q_events_daily",
-    "q_approx_distinct",
-    "q_approx_percentile",
-    "q_hll_sketch",
-    "q11_important_stock",
-    "q_funnel_conversion",
-    "q_retention_cohort",
-    "q_session_window_native",
-    "q_custom_agg_geomean",
-    "q_table_profile",
-    "q_abc_analysis",
-    "q_bitmap_distinct",
-    "q_cumulative_distinct",
-    "q_ks_drift",
-    "ind_standardize",
-    "ind_observation_view",
-    "ind_combine_dimensions",
-    "ind_melt",
-    "ind_country_map",
-    "ind_country_filter",
-    "ind_year_filter",
-    "ind_dedup_first",
-    "ind_insert_ignore",
-    "ind_metadata_dedup",
-    "ind_validate",
-    "ind_indicator_format",
-    "ind_value_stats",
-    "ind_pipeline_e2e",
-    # (b) new in round 14 — appended as they land
-    "q_cms_heavy_hitters",
-    "stream_stream_left_join",
-    "stream_cms_sketch",
-    "q_kmv_set_ops",
-    # (c) the r10-evidence cohort fills the remaining window room,
-    # highest-signal first (flagship TPC-H core, then the iterative
-    # graph key). Each new (b) key pushes the tail of this block past
-    # the 50-key boundary into the r15 queue — the marker below must
-    # move up one slot per (b) key added (ADVICE r13: the marker sits
-    # AFTER the 50th key so the comment matches the stamped window).
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    # --- 50-key boundary (44 a + 4 b + 2 c): keys below overflow ---
-    "q5_local_supplier",
-    "q_pagerank_nations",
-    "q2_min_cost_supplier",
-    "q_weighted_percentile",
-    "q_attribution",
-    "q_growth_accounting",
-    "q_gini",
-    "q_skyline",
-    "q_gains_lift",
-    "q_time_to_convert",
-    "q_psi_drift",
-    "q_bitmap_retention",
-    "q_decayed_engagement",
-    "ind_upsert",
-    "ind_star_series",
-    "ind_star_observation",
-    "ind_ewma",
-    "ind_benford",
-    "ind_outlier_mad",
-    "ind_deseasonalize",
-]
-
-
-def _apply_driver_window_priority() -> None:
-    ordered = {n: QUERIES[n] for n in _DRIVER_WINDOW_PRIORITY if n in QUERIES}
-    ordered.update((n, f) for n, f in QUERIES.items() if n not in ordered)
-    QUERIES.clear()
-    QUERIES.update(ordered)
-    oracles = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(oracles)
-
-
-_apply_driver_window_priority()
-
 __all__ = ["QUERIES", "ORACLES", "query"]

@@ -677,7 +677,7 @@ def ind_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     → read-back → star-schema build → observation reconstruction.
 
     The output is the observations RECONSTRUCTED from the loaded star
-    (series ⋈ the three dims), and the oracle is the plain
+    (``database.observation_view``), and the oracle is the plain
     standardized relation — equality proves the load, the surrogate
     keying, and the view round-trip lose and invent nothing. Each leg
     keeps its scale shape: versioned write/read is a plain columnar
@@ -706,38 +706,15 @@ def ind_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("name"),
         )
         star = database.build_star_schema(loaded, country)
-        series, ind_d, dim_d = star["series"], star["indicator"], star["dimension"]
-        recon = (
-            series.join(
-                F.broadcast(country.select(F.col("id").alias("country_id"), "iso_3")),
-                "country_id",
-            )
-            .join(
-                F.broadcast(
-                    ind_d.select(
-                        F.col("id").alias("indicator_id"), "name", "provider"
-                    )
-                ),
-                "indicator_id",
-            )
-            .join(
-                F.broadcast(
-                    dim_d.select(
-                        F.col("id").alias("dimension_id"),
-                        F.col("name").alias("dimension"),
-                    )
-                ),
-                "dimension_id",
-            )
-            .select(
-                "provider",
-                F.col("name").alias("indicator_name"),
-                F.col("iso_3").alias("country_code"),
-                F.col("year").cast("int").alias("year"),
-                "dimension",
-                F.col("value").cast("double").alias("value"),
-            )
+        recon = database.observation_view(star).select(
+            F.col("indicator_provider").alias("provider"),
+            "indicator_name",
+            F.col("country_code_3").alias("country_code"),
+            F.col("year").cast("int").alias("year"),
+            F.col("dimension_name").alias("dimension"),
+            F.col("value").cast("double").alias("value"),
         )
+        # eager: the finally block deletes the parquet the view scans
         return recon.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -214,33 +214,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "dedup_cc_largestar",
-    oracle=_CLUSTERS_CTE_SQL + "SELECT doc_id, cluster_id FROM clusters",
-)
-def dedup_cc_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate clusters via alternating large-star/small-star
-    contraction (Kiveris et al., SoCC'14) — the second, shuffle-
-    bounded connected-components algorithm
-    (``operators.dedup.connected_components_star``).
-
-    Identical result contract to ``dedup_clusters`` (component-min
-    labels over the same exact-Jaccard pair graph) and the SAME
-    recursive-CTE oracle — one spec, two independent distributed
-    algorithms, both value-oracled. Star contraction rewrites the
-    edge list itself toward a star forest (per round: one node-keyed
-    min-aggregate + one node-keyed join, edge count non-increasing
-    after dedup), so deep components converge without carrying a
-    |V|-row label table through every round — the published
-    MapReduce-CC recipe, picked over label propagation when
-    components are long chains rather than near-dup cliques.
-    """
-    pairs = dedup.ngram_jaccard_pairs(
-        read_table(spark, sf_dir, "documents"), threshold=0.2, max_shingle_freq=None
-    )
-    return dedup.connected_components_star(pairs)
-
-
-@query(
     "dedup_survivors",
     oracle=_CLUSTERS_CTE_SQL
     + """
@@ -831,15 +804,15 @@ def emb_cosine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition of two independently-oracled operators:
     ``similarity.embedding_cosine_pairs`` (exact pairwise cosine at
     demo scale — the registered ANN stack is the scale path for the
-    pair generation) and ``operators.dedup.connected_components_star``
-    (fourth consumer). The oracle replays the cosine pair CTE and the
-    recursive closure verbatim.
+    pair generation) and ``operators.dedup.connected_components``.
+    The oracle replays the cosine pair CTE and the recursive closure
+    verbatim.
     """
     pairs = similarity.embedding_cosine_pairs(
         read_table(spark, sf_dir, "embeddings"), threshold=0.4,
         n_rows=_emb_rows(sf_dir),
     )
-    return dedup.connected_components_star(
+    return dedup.connected_components(
         pairs, a_col="id_a", b_col="id_b"
     ).select(F.col("doc_id").alias("vec_id"), "cluster_id")
 
@@ -1278,9 +1251,8 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     a FULL value oracle: DuckDB re-derives the identical sketch in
     ANSI SQL. Estimate-vs-TRUTH accuracy (estimates ≥ truth,
     overestimate ≤ bound, true top-10 recalled) stays pytest-gated
-    (tests/test_round14_ops.py); `hash_family="xxhash64"` is the
-    production fast path, shape-pinned against this face. See
-    operators/text.py cms_sketch / cms_heavy_hitters."""
+    (tests/test_round14_ops.py). See operators/text.py cms_sketch /
+    cms_heavy_hitters."""
     return text.cms_heavy_hitters(
         read_table(spark, sf_dir, "documents")
     )
@@ -1833,14 +1805,12 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ``multimodal.phash_pairs`` (mm_phash_dedup's banded Hamming
     search) run in PRODUCTION mode — ``max_band_bucket=64``, the §4
     banded-signature cap, replayed in the oracle's ``bands_ok`` CTE —
-    and the closure is ``operators.dedup.connected_components_star``
-    (the Kiveris large-star/small-star contraction, its third
-    consumer). The cap is load-bearing here where the pairs-only demo
-    runs uncapped: at 27× corpus the 16-bit band grid saturates and
-    UNCAPPED candidates grow ~K² (measured ratio 23.6 vs 2.9 capped —
+    and the closure is ``operators.dedup.connected_components``. The
+    cap is load-bearing here where the pairs-only demo runs uncapped:
+    at 27× corpus the 16-bit band grid saturates and UNCAPPED
+    candidates grow ~K² (measured ratio 23.6 vs 2.9 capped —
     SCALE.md §Round-10), exactly the blowup the r9 rule predicts.
-    Shuffle-bounded end-to-end: capped buckets, never all pairs;
-    per-round node-keyed contraction, never a |V|-row label broadcast.
+    Capped buckets bound the pair graph, never all pairs.
     """
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     variants = docs.select(
@@ -1849,7 +1819,7 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = multimodal.attach_binary_payload(docs.unionByName(variants))
     pairs = multimodal.phash_pairs(corpus, max_hamming=6, max_band_bucket=64)
-    return dedup.connected_components_star(pairs)
+    return dedup.connected_components(pairs)
 
 
 _PH256 = _ph_fragments(256)

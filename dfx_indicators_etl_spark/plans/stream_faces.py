@@ -472,11 +472,7 @@ def _f_cms_sketch(spark, sf_dir):
     toks = read_table(spark, sf_dir, "documents").select(
         F.explode(text_ops.tokens("text")).alias("word")
     )
-    return [
-        text_ops.cms_sketch(
-            toks, "word", depth=4, width=512, hash_family="portable"
-        )
-    ]
+    return [text_ops.cms_sketch(toks, "word", depth=4, width=512)]
 
 
 @face("stream_psi_drift")

@@ -111,22 +111,17 @@ def write_dataset(
     name: str,
     folder: str = "",
     version: str | None = None,
-    partition_by: tuple[str, ...] = (),
     mode: str = "overwrite",
 ) -> str:
     """Write a versioned parquet dataset; returns its full path.
 
     Layout matches the reference (`storage/_base.py:46-69`):
     ``<root>/<version>/<folder>/<name>.parquet`` — but as a parquet
-    directory, optionally hive-partitioned by ``partition_by`` so a
-    reader filtering on those columns prunes whole directories.
+    directory. For a hive-partitioned write use ``write_partitioned``.
     """
     version = version or dataset_version()
     path = "/".join(p for p in (root, version, folder, f"{name}.parquet") if p)
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode(mode).parquet(path)
     return path
 
 

@@ -1989,9 +1989,7 @@ def incremental_cms_sketch(
         toks = batch_df.select(
             F.explode(text_ops.tokens("text")).alias("word")
         )
-        cells = text_ops.cms_sketch(
-            toks, "word", depth=depth, width=width, hash_family="portable"
-        )
+        cells = text_ops.cms_sketch(toks, "word", depth=depth, width=width)
         cells.write.mode("overwrite").parquet(
             f"{state_dir}/batch_id={batch_id}"
         )

@@ -38,7 +38,6 @@ def run(transformer, raw, provider, country_mapping):
         raw,
         provider=provider,
         countries=country_mapping,
-        country_key="iso_alpha_3",
     )
 
 

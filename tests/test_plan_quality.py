@@ -473,9 +473,9 @@ BOUNDED_EXACT = {
 ADAPTIVE_QUADRATIC = {
     "dedup_embedding_cosine": "operators.similarity.embedding_cosine_pairs",
     # emb_cosine_clusters consumes the SAME routed pair generator, but
-    # connected_components_star's iterative checkpoints hide the
-    # upstream plan from this sweep — its pair generation is covered
-    # by the dedup_embedding_cosine entry above (same call site).
+    # connected_components' edge checkpoint hides the upstream plan
+    # from this sweep — its pair generation is covered by the
+    # dedup_embedding_cosine entry above (same call site).
     "emb_knn_graph": "operators.similarity.knn_graph",
 }
 

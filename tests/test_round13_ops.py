@@ -1,7 +1,6 @@
-"""Round-13 pins: the xxhash64 production fast path for the hashing-
-trick featurizer (VERDICT r12 #3) — the portable md5 face stays the
-oracled registry key; the fast path must match its feature-space
-SHAPE (totals, sparsity, load distribution), not its exact buckets.
+"""Round-13 pins: exact PCA covariance partials and projection
+invariants, the chained-index fold paths, the kNN multiprobe recall
+gate and the half-up rounding face.
 """
 
 from __future__ import annotations
@@ -9,76 +8,7 @@ from __future__ import annotations
 import pytest
 import pyspark.sql.functions as F
 
-from dfx_indicators_etl_spark.operators import text
 from dfx_indicators_etl_spark.sources.readers import read_table
-
-N_FEATURES = 1024
-
-
-@pytest.fixture(scope="module")
-def fam_stats(spark, sf_dir):
-    docs = read_table(spark, sf_dir, "documents")
-    out = {}
-    for fam in ("portable", "xxhash64"):
-        feats = text.hashed_ngram_features(
-            docs, n_features=N_FEATURES, hash_family=fam
-        ).cache()
-        hist = (
-            feats.groupBy("feature")
-            .agg(F.sum("n").alias("load"))
-            .agg(
-                F.count(F.lit(1)).alias("occupied"),
-                F.max("load").alias("max_load"),
-                F.sum("load").alias("total"),
-            )
-            .collect()[0]
-        )
-        out[fam] = {
-            "coo_rows": feats.count(),
-            "total_grams": feats.agg(F.sum("n")).collect()[0][0],
-            "occupied": hist["occupied"],
-            "max_load": hist["max_load"],
-        }
-        feats.unpersist()
-    return out
-
-
-def test_total_gram_mass_identical(fam_stats):
-    # The hash family only relabels grams — the total bigram count
-    # (sum of n) must be bit-identical between families.
-    assert fam_stats["portable"]["total_grams"] == (
-        fam_stats["xxhash64"]["total_grams"]
-    )
-
-
-def test_collision_statistics_match_shape(fam_stats):
-    # COO row count = Σ_doc distinct features hit; within-doc
-    # collisions differ per family only by hash luck. Both families
-    # are uniform 64-bit hashes folded mod 1024, so the sparsity must
-    # agree within 2%.
-    a = fam_stats["portable"]["coo_rows"]
-    b = fam_stats["xxhash64"]["coo_rows"]
-    assert abs(a - b) / a < 0.02, (a, b)
-
-
-def test_feature_space_load_shape_matches(fam_stats):
-    # The bigram distribution is Zipfian, so bucket loads are NOT
-    # uniform — the shape pin is family-vs-family: both 64-bit hashes
-    # folded mod 1024 must occupy the same number of buckets (±3%)
-    # and agree on the heaviest bucket's load within 1.5x (the top
-    # load is the top-gram count plus hash-luck collisions).
-    a, b = fam_stats["portable"], fam_stats["xxhash64"]
-    assert abs(a["occupied"] - b["occupied"]) / a["occupied"] < 0.03, (a, b)
-    hi, lo = max(a["max_load"], b["max_load"]), min(
-        a["max_load"], b["max_load"]
-    )
-    assert hi / lo < 1.5, (a, b)
-
-
-def test_unknown_family_raises(spark, sf_dir):
-    docs = read_table(spark, sf_dir, "documents")
-    with pytest.raises(ValueError, match="hash_family"):
-        text.hashed_ngram_features(docs, hash_family="fnv1a").collect()
 
 
 def test_pca_cov_partials_partition_independent(spark, sf_dir):
@@ -275,33 +205,3 @@ def test_round6_half_up_matches_spark_round_adversarially(spark):
             got[x],
             _round6_half_up(x),
         )
-
-
-def test_driver_window_priority_is_sound():
-    # A typo or dupe in _DRIVER_WINDOW_PRIORITY silently burns a
-    # round of driver evidence (the driver stamps the FIRST 50
-    # registry keys in insertion order). Guard: every listed name is
-    # registered, no dupes, and the priority fills the whole window.
-    import dfx_indicators_etl_spark.plans as plans_init
-    from dfx_indicators_etl_spark.plans import QUERIES
-
-    pri = plans_init._DRIVER_WINDOW_PRIORITY
-    unknown = [n for n in pri if n not in QUERIES]
-    assert unknown == [], f"priority names not registered: {unknown}"
-    assert len(pri) == len(set(pri)), "duplicate names in priority"
-    assert len(pri) >= 50, "priority must cover the 50-key window"
-    # and the registry actually starts with the priority ordering
-    assert list(QUERIES)[: len(pri)] == [n for n in pri]
-
-
-def test_portable_face_unchanged_by_default(spark, sf_dir):
-    # The registry key runs the default family; pin that the default
-    # IS the portable md5 derivation (a silent default flip would
-    # break the committed oracle).
-    docs = read_table(spark, sf_dir, "documents").limit(50)
-    default = text.hashed_ngram_features(docs, n_features=N_FEATURES)
-    portable = text.hashed_ngram_features(
-        docs, n_features=N_FEATURES, hash_family="portable"
-    )
-    assert default.exceptAll(portable).count() == 0
-    assert portable.exceptAll(default).count() == 0

@@ -5,7 +5,6 @@ count-min heavy-hitter sketch, and the stream-stream LEFT OUTER join.
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from dfx_indicators_etl_spark.sources.readers import read_table
@@ -408,9 +407,8 @@ def test_stream_left_join_restart_flushes_unmatched(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# The CMS hash-family split (portable md5 face = the FULL-oracled
-# registered key; xxhash64 = the production fast path) and the
-# streaming face's replay discipline.
+# The CMS sketch's shape (the registered key's portable md5 pair-hash)
+# and the streaming face's replay discipline.
 
 
 def test_cms_families_agree_on_shape(spark, sf_dir):
@@ -420,48 +418,16 @@ def test_cms_families_agree_on_shape(spark, sf_dir):
     toks = docs.select(F.explode(T.tokens("text")).alias("word"))
     n_tokens = toks.count()
     n_distinct = toks.distinct().count()
-    for family in ("portable", "xxhash64"):
-        cells = T.cms_sketch(
-            toks, depth=3, width=512, hash_family=family
-        ).collect()
-        # mass conservation: every occurrence lands in exactly one
-        # bucket per row
-        assert sum(r["c"] for r in cells) == 3 * n_tokens, family
-        # and the occupancy is hash-like (no degenerate family):
-        # close to one cell per (row, distinct word) at width >> vocab
-        # (collisions shave a few), and never more
-        assert (
-            3 * n_distinct // 2
-            < len(cells)
-            <= 3 * min(512, n_distinct)
-        ), (family, len(cells), n_distinct)
-
-    def trial(family):
-        got = T.cms_heavy_hitters(
-            docs, depth=3, width=512, top_k=10, hash_family=family
-        ).collect()
-        return {r["word"]: r["est_freq"] for r in got}
-
-    p, x = trial("portable"), trial("xxhash64")
-    # both families' estimates obey the same one-sided error bound, so
-    # on shared reported words they differ by at most the sum of the
-    # two (already slack-inflated) overestimates
-    bound = 2 * 4 * 2 * n_tokens / 512
-    shared = set(p) & set(x)
-    assert len(shared) >= 5, (sorted(p), sorted(x))
-    for w in shared:
-        assert abs(p[w] - x[w]) <= bound, (w, p[w], x[w])
-
-
-def test_cms_unknown_family_fails_loudly(spark, sf_dir):
-    from dfx_indicators_etl_spark.operators import text as T
-
-    docs = read_table(spark, sf_dir, "documents").limit(5)
-    toks = docs.select(F.explode(T.tokens("text")).alias("word"))
-    with pytest.raises(ValueError, match="hash_family"):
-        T.cms_sketch(toks, hash_family="md5ish")
-    with pytest.raises(ValueError, match="hash_family"):
-        T.cms_heavy_hitters(docs, hash_family="md5ish")
+    cells = T.cms_sketch(toks, depth=3, width=512).collect()
+    # mass conservation: every occurrence lands in exactly one bucket
+    # per row
+    assert sum(r["c"] for r in cells) == 3 * n_tokens
+    # and the occupancy is hash-like (no degenerate hash): close to one
+    # cell per (row, distinct word) at width >> vocab (collisions shave
+    # a few), and never more
+    assert (
+        3 * n_distinct // 2 < len(cells) <= 3 * min(512, n_distinct)
+    ), (len(cells), n_distinct)
 
 
 def test_stream_cms_restart_does_not_double_count(spark, sf_dir, tmp_path):
@@ -501,9 +467,7 @@ def test_stream_cms_restart_does_not_double_count(spark, sf_dir, tmp_path):
     toks = docs.select(F.explode(T.tokens("text")).alias("word"))
     oneshot = {
         (r["i"], r["bucket"]): r["c"]
-        for r in T.cms_sketch(
-            toks, depth=4, width=512, hash_family="portable"
-        ).collect()
+        for r in T.cms_sketch(toks, depth=4, width=512).collect()
     }
     assert first == oneshot
 

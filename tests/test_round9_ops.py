@@ -104,63 +104,6 @@ def test_ks_drift_identical_distributions_zero(spark):
     assert d[0]["d"] == 0
 
 
-def test_cc_star_equals_label_prop_on_random_graphs(spark):
-    """Star contraction and min-label propagation must agree on every
-    graph shape: random sparse graphs, long chains, cliques, and a
-    mix — both reduce to the same component-min contract."""
-    import random
-
-    from dfx_indicators_etl_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(9)
-    cases = []
-    # random sparse graphs
-    for n, m in [(30, 20), (50, 60)]:
-        cases.append(
-            [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        )
-    # a 40-node chain (deep component: the star algorithm's home turf)
-    cases.append([(i, i + 1) for i in range(40)])
-    # two cliques bridged by one edge
-    k = list(range(100, 106))
-    cases.append(
-        [(a, b) for a in k for b in k if a < b]
-        + [(200 + a, 200 + b) for a in range(5) for b in range(5) if a < b]
-        + [(105, 200)]
-    )
-    for edges in cases:
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        want = {
-            (r.doc_id, r.cluster_id)
-            for r in connected_components(df).collect()
-        }
-        got = {
-            (r.doc_id, r.cluster_id)
-            for r in connected_components_star(df).collect()
-        }
-        assert got == want, (sorted(got - want), sorted(want - got))
-
-
-def test_cc_star_single_edge_and_self_loop(spark):
-    from dfx_indicators_etl_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    df = spark.createDataFrame([(7, 3), (5, 5)], "doc_a long, doc_b long")
-    got = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components_star(df).collect()
-    }
-    # self-loops are dropped; the 3-7 pair labels both with min=3
-    assert got == {(3, 3), (7, 3)}
-
-
 def test_ewma_matches_python_recurrence(spark, sf_dir):
     """The in-plan fold equals the literal s_t = 0.25 v_t + 0.75 s_{t-1}
     recurrence computed in Python over the same series."""

@@ -125,8 +125,7 @@ def test_sdg_database_goal_workbooks(spark, tmp_path):
         ["name", "m49", "iso_alpha_3"],
     )
     out = sdg.Transformer(mapping)(
-        raw, provider="unstats_sdg_database", countries=mapping,
-        country_key="iso_alpha_3",
+        raw, provider="unstats_sdg_database", countries=mapping
     )
     got = {(r.country_code, r.year): r.value for r in out.collect()}
     assert got == {("FRA", 2019): 1.5, ("DEU", 2020): 2.5}
@@ -142,7 +141,6 @@ def test_sipri_xlsx_end_to_end(spark, sipri_workbook):
         raw,
         provider="sipri_milex",
         countries=mapping,
-        country_key="iso_alpha_3",
     )
     rows = out.collect()
     # 4 sheets × (France 2019 + Germany 2020); Atlantis + sentinels drop
