@@ -104,6 +104,76 @@ def test_ks_drift_identical_distributions_zero(spark):
     assert d[0]["d"] == 0
 
 
+def _cc_labels(spark, edges, **kw):
+    from dfx_indicators_etl_spark.operators.dedup import connected_components
+
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    return {
+        (r.doc_id, r.cluster_id)
+        for r in connected_components(df, **kw).collect()
+    }
+
+
+def test_cc_star_equals_label_prop_on_random_graphs(spark):
+    """The driver union-find path and the distributed pointer-jumping
+    loop (``small_graph_edges=0``) of connected_components must agree,
+    and equal the component minimum from a plain BFS, on every graph
+    shape the retired star-contraction twin was checked on: random
+    sparse graphs, a long chain, and two cliques bridged by one edge."""
+    import random
+
+    def component_min(edges):
+        adj = {}
+        for a, b in edges:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+        labels = set()
+        seen = set()
+        for start in adj:
+            if start not in seen:
+                comp, todo = {start}, [start]
+                while todo:
+                    for nb in adj[todo.pop()] - comp:
+                        comp.add(nb)
+                        todo.append(nb)
+                seen |= comp
+                labels |= {(node, min(comp)) for node in comp}
+        return labels
+
+    rng = random.Random(9)
+    cases = []
+    # random sparse graphs
+    for n, m in [(30, 20), (50, 60)]:
+        cases.append(
+            [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+        )
+    # a 40-node chain (a deep component)
+    cases.append([(i, i + 1) for i in range(40)])
+    # two cliques bridged by one edge
+    k = list(range(100, 106))
+    cases.append(
+        [(a, b) for a in k for b in k if a < b]
+        + [(200 + a, 200 + b) for a in range(5) for b in range(5) if a < b]
+        + [(105, 200)]
+    )
+    for edges in cases:
+        edges = [(a, b) for a, b in edges if a != b]
+        want = component_min(edges)
+        small = _cc_labels(spark, edges)
+        dist = _cc_labels(spark, edges, small_graph_edges=0)
+        assert small == want, (sorted(small - want), sorted(want - small))
+        assert dist == want, (sorted(dist - want), sorted(want - dist))
+
+
+def test_cc_star_single_edge_and_self_loop(spark):
+    # The 3-7 pair labels both with min=3; a node whose only pair is
+    # itself stays as its own one-node cluster, on both paths.
+    edges = [(7, 3), (5, 5)]
+    want = {(3, 3), (7, 3), (5, 5)}
+    assert _cc_labels(spark, edges) == want
+    assert _cc_labels(spark, edges, small_graph_edges=0) == want
+
+
 def test_ewma_matches_python_recurrence(spark, sf_dir):
     """The in-plan fold equals the literal s_t = 0.25 v_t + 0.75 s_{t-1}
     recurrence computed in Python over the same series."""
