@@ -7,12 +7,17 @@ or band-bucket → doc) and only join within index buckets, with an
 optional frequency cap to bound bucket fan-out on skewed corpora.
 Everything is built-in column expressions — no Python in the hot path.
 
-Two hash families coexist deliberately: the xxhash64 family (fastest;
-engine-specific, so its queries verify rows-only / by pytest
-equivalence) and the ``*_portable`` md5 family (~1.5× the wall time;
-every step reproduces bit-for-bit in ANSI SQL, so its queries carry
-full DuckDB value oracles). Streaming dedup uses xxhash64; the
-oracle-checked batch keys use portable.
+Every near-duplicate search here and in ``operators.multimodal`` /
+``text.cdc_chunk_pairs`` meets its pairs through one join,
+``_bucket_pairs``: cap the hot buckets, then self-join on the bucket
+key.
+
+MinHash has two hash families: the xxhash64 one
+(``minhash_lsh_pairs``; fastest, engine-specific, so it is checked
+rows-only / by pytest equivalence — the ``corpus_dedup`` benchmark
+workload runs it) and the ``*_portable`` md5 one (~1.5× the wall time;
+every step reproduces bit-for-bit in ANSI SQL, so the oracle-checked
+batch keys and every streaming key use it). SimHash is portable only.
 """
 
 from __future__ import annotations
@@ -39,8 +44,6 @@ __all__ = [
     "minhash_lsh_pairs",
     "minhash_signatures_portable",
     "minhash_lsh_pairs_portable",
-    "simhash",
-    "simhash_pairs",
     "simhash_portable",
     "simhash_pairs_portable",
     "connected_components",
@@ -73,6 +76,70 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _drop_hot_buckets(
+    index: DataFrame, keys: list[str], cap: int | None
+) -> DataFrame:
+    """``index`` without the buckets (rows equal on ``keys``) that hold
+    more than ``cap`` rows; ``cap=None`` keeps every bucket."""
+    if cap is None:
+        return index
+    ok = index.groupBy(*keys).count().filter(F.col("count") <= cap).select(*keys)
+    return index.join(ok, keys, "left_semi")
+
+
+def _bucket_pairs(
+    index: DataFrame,
+    keys: list[str],
+    cap: int | None,
+    carry: tuple[str, ...] | list[str] = (),
+) -> DataFrame:
+    """Document pairs that share an inverted-index bucket — the one
+    near-duplicate join behind every pair search of the LLM-data layer.
+
+    ``index`` holds rows ``(doc_id, *keys, *carry)``. Buckets of more
+    than ``cap`` rows drop first (``_drop_hot_buckets``: the skew guard
+    that bounds join output by cap² per bucket); the rest self-join on
+    ``keys`` and keep ``doc_a < doc_b``, so a document listed twice in
+    one bucket never pairs with itself. One row per such pair of index
+    rows: ``*keys, doc_a, *carry·a, doc_b, *carry·b``, where carried
+    column ``c`` comes back once per side as ``c + "a"`` and
+    ``c + "b"``.
+    """
+    index = _drop_hot_buckets(index, keys, cap)
+
+    def side(s: str) -> DataFrame:
+        return index.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(c + s) for c in carry],
+            *keys,
+        )
+
+    return side("a").join(side("b"), keys).filter(F.col("doc_a") < F.col("doc_b"))
+
+
+def _overlap_counts(index: DataFrame, key: str, cap: int | None) -> DataFrame:
+    """Columns ``doc_a, doc_b, n_common, n_a, n_b`` over an index of
+    distinct ``(doc_id, key)`` rows: the shared-key count of every pair
+    that shares a key, and both documents' key counts — all over the
+    capped index, so a capped key leaves the intersection and the sizes
+    alike. The set-overlap scores (Jaccard, containment) are formulas
+    over these five columns."""
+    index = _drop_hot_buckets(index, [key], cap)
+    sizes = index.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    common = (
+        _bucket_pairs(index, [key], None)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return common.join(
+        sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a")),
+        "doc_a",
+    ).join(
+        sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b")),
+        "doc_b",
+    )
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -207,32 +274,11 @@ def ngram_jaccard_pairs(
         .select("doc_id", F.explode(hashed_gram_ids(F.col("__th"), n)).alias("shingle"))
         .localCheckpoint(eager=False)
     )
-    if max_shingle_freq is not None:
-        freq_ok = (
-            doc_shingles.groupBy("shingle")
-            .count()
-            .filter(F.col("count") <= max_shingle_freq)
-            .select("shingle")
-        )
-        doc_shingles = doc_shingles.join(freq_ok, "shingle", "left_semi")
-    sizes = doc_shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-
-    left = doc_shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    right = doc_shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        left.join(right, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    size_a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    size_b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
     jaccard = F.col("n_common").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("n_common")
     ).cast("double")
     return (
-        common.join(size_a, "doc_a")
-        .join(size_b, "doc_b")
+        _overlap_counts(doc_shingles, "shingle", max_shingle_freq)
         .select("doc_a", "doc_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -268,34 +314,10 @@ def containment_pairs(
         .select("doc_id", F.explode(hashed_gram_ids(F.col("__th"), n)).alias("shingle"))
         .localCheckpoint(eager=False)
     )
-    if max_shingle_freq is not None:
-        freq_ok = (
-            doc_shingles.groupBy("shingle")
-            .count()
-            .filter(F.col("count") <= max_shingle_freq)
-            .select("shingle")
-        )
-        doc_shingles = doc_shingles.join(freq_ok, "shingle", "left_semi")
-    sizes = doc_shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    left = doc_shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
-    right = doc_shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        left.join(right, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     cont_a = F.col("n_common").cast("double") / F.col("n_a").cast("double")
     cont_b = F.col("n_common").cast("double") / F.col("n_b").cast("double")
     return (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
+        _overlap_counts(doc_shingles, "shingle", max_shingle_freq)
         .select(
             "doc_a",
             "doc_b",
@@ -343,30 +365,12 @@ def shared_spans(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks")
     )
     grams = shingles_from_tokens(F.col("__toks"), n)
+    # p = the shingle's 0-based token position; pairs carry it as pa/pb
     ix = tokenized.select(
-        "doc_id", F.posexplode(grams).alias("pos", "shingle")
+        "doc_id", F.posexplode(grams).alias("p", "shingle")
     ).localCheckpoint(eager=False)
-    if max_shingle_freq is not None:
-        freq_ok = (
-            ix.groupBy("shingle")
-            .count()
-            .filter(F.col("count") <= max_shingle_freq)
-            .select("shingle")
-        )
-        ix = ix.join(freq_ok, "shingle", "left_semi")
-    left = ix.select(
-        F.col("doc_id").alias("doc_a"), F.col("pos").alias("pa"), "shingle"
-    )
-    right = ix.select(
-        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pb"), "shingle"
-    )
-    matches = (
-        left.join(right, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b", "pa", "pb",
-            (F.col("pb") - F.col("pa")).alias("delta"),
-        )
+    matches = _bucket_pairs(ix, ["shingle"], max_shingle_freq, carry=["p"]).select(
+        "doc_a", "doc_b", "pa", "pb", (F.col("pb") - F.col("pa")).alias("delta")
     )
     w = Window.partitionBy("doc_a", "doc_b", "delta").orderBy("pa")
     islands = matches.withColumn(
@@ -536,16 +540,32 @@ def minhash_lsh_pairs(
     pass ``None`` explicitly for exhaustive candidates (the
     oracle-checked mode).
     """
+    return _lsh_pairs(
+        minhash_signatures(df, n, text_col, id_col),
+        F.xxhash64,
+        threshold,
+        max_band_bucket,
+    )
+
+
+def _lsh_pairs(
+    sigs: DataFrame,
+    band_key,
+    threshold: float,
+    max_band_bucket: int | None,
+) -> DataFrame:
+    """Banded LSH over ``(doc_id, signature)`` rows, shared by both
+    MinHash families: ``LSH_BANDS`` bands of ``NUM_PERMS / LSH_BANDS``
+    components, ``band_key`` maps one band's slice to its bucket key,
+    candidates are ``_bucket_pairs`` over (band_idx, band_key), and
+    each verifies by the estimated Jaccard (fraction of equal
+    signature components)."""
     # Signatures feed the band explode AND both sides of the verify
     # join — a lazy localCheckpoint computes the sketch once
     # (~0.5 KB/doc) and is context-cleaner-released when the result
     # plan is GC'd (persist() would pin it in the cache manager until
     # an explicit unpersist nobody owns).
-    sigs = (
-        minhash_signatures(df, n, text_col, id_col)
-        .filter(F.col("signature").isNotNull())
-        .localCheckpoint(eager=False)
-    )
+    sigs = sigs.filter(F.col("signature").isNotNull()).localCheckpoint(eager=False)
     rows_per_band = NUM_PERMS // LSH_BANDS
     # Bucket index carries only (doc_id, band) — signatures rejoin later
     # so 64-long arrays never ride through the band shuffle.
@@ -554,7 +574,7 @@ def minhash_lsh_pairs(
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                lambda b: F.xxhash64(
+                lambda b: band_key(
                     F.slice(
                         F.col("signature"),
                         (b * rows_per_band + 1).cast("int"),
@@ -562,23 +582,10 @@ def minhash_lsh_pairs(
                     )
                 ),
             )
-        ).alias("band_idx", "band_hash"),
+        ).alias("band_idx", "band_key"),
     )
-    if max_band_bucket is not None:
-        ok = (
-            bands.groupBy("band_idx", "band_hash")
-            .count()
-            .filter(F.col("count") <= max_band_bucket)
-            .select("band_idx", "band_hash")
-        )
-        bands = bands.join(ok, ["band_idx", "band_hash"], "left_semi")
     candidates = (
-        bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_hash")
-        .join(
-            bands.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_hash"),
-            ["band_idx", "band_hash"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _bucket_pairs(bands, ["band_idx", "band_key"], max_band_bucket)
         .select("doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -681,66 +688,11 @@ def minhash_lsh_pairs_portable(
     but the band key is the comma-joined component string instead of a
     rehash, so a DuckDB oracle reproduces the exact candidate set and
     the estimated Jaccard values hash-match."""
-    sigs = (
-        minhash_signatures_portable(df, n, text_col, id_col)
-        .filter(F.col("signature").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    rows_per_band = NUM_PERMS // LSH_BANDS
-    bands = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
-                lambda b: F.array_join(
-                    F.slice(
-                        F.col("signature"),
-                        (b * rows_per_band + 1).cast("int"),
-                        rows_per_band,
-                    ),
-                    ",",
-                ),
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    if max_band_bucket is not None:
-        ok = (
-            bands.groupBy("band_idx", "band_key")
-            .count()
-            .filter(F.col("count") <= max_band_bucket)
-            .select("band_idx", "band_key")
-        )
-        bands = bands.join(ok, ["band_idx", "band_key"], "left_semi")
-    candidates = (
-        bands.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_key")
-        .join(
-            bands.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_key"),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        ).cast("double")
-        / NUM_PERMS
-    )
-    return (
-        candidates.join(
-            sigs.select(F.col("doc_id").alias("doc_a"), F.col("signature").alias("sig_a")),
-            "doc_a",
-        )
-        .join(
-            sigs.select(F.col("doc_id").alias("doc_b"), F.col("signature").alias("sig_b")),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+    return _lsh_pairs(
+        minhash_signatures_portable(df, n, text_col, id_col),
+        lambda band: F.array_join(band, ","),
+        threshold,
+        max_band_bucket,
     )
 
 
@@ -800,25 +752,55 @@ def simhash_pairs_portable(
     id_col: str = "doc_id",
     max_band_bucket: int | None = DEFAULT_MAX_BAND_BUCKET,
 ) -> DataFrame:
-    """``simhash_pairs`` over the portable sketch: banded Hamming
-    search (``bands`` > ``max_hamming`` keeps the pigeonhole recall
-    guarantee) whose band keys are bit-string concatenations — the
+    """Near-duplicate pairs ``(doc_a, doc_b, hamming)`` within Hamming
+    ``max_hamming`` over the 128-bit ``simhash_portable`` sketch, by
+    banded search (``_banded_hamming_pairs``: ``bands`` > ``max_hamming``
+    keeps the pigeonhole recall guarantee) on bit-slice band keys — the
     whole pipeline, sketch included, reproduces in DuckDB."""
+    return _banded_hamming_pairs(
+        simhash_portable(df, n, text_col, id_col),
+        PORTABLE_SIMHASH_BITS,
+        max_hamming,
+        bands,
+        max_band_bucket,
+    )
+
+
+def _banded_hamming_pairs(
+    sketch: DataFrame,
+    n_bits: int,
+    max_hamming: int,
+    bands: int,
+    max_band_bucket: int | None,
+) -> DataFrame:
+    """Pairs within Hamming ``max_hamming`` over ``(doc_id, w0…)`` rows,
+    an ``n_bits``-bit hash packed into 32-bit words (the shape of
+    ``simhash_portable`` and ``multimodal.phash_words``).
+
+    Each doc explodes into ``bands`` (band_idx, band_key) rows, band
+    key = that band's bit slice; candidates are ``_bucket_pairs`` over
+    the band buckets (never all pairs), and the exact Hamming check
+    (``bit_count(xor)`` over the words) filters them. A pair within
+    ``max_hamming`` differs in at most that many bands, so with
+    ``bands > max_hamming`` at least one band matches: ``max_hamming
+    >= bands`` would silently miss pairs and raises instead, as does a
+    band width that does not divide 32 (a band may not straddle two
+    words). Recall is approximate only for members of buckets larger
+    than ``max_band_bucket``, which any less crowded band still pairs.
+    """
     if max_hamming >= bands:
         raise ValueError(
             f"max_hamming={max_hamming} needs more than {bands} bands "
             "for guaranteed recall (pigeonhole: a qualifying pair must "
             "share at least one unchanged band)."
         )
-    if PORTABLE_SIMHASH_BITS % bands or 32 % (PORTABLE_SIMHASH_BITS // bands):
+    if n_bits % bands or 32 % (n_bits // bands):
         raise ValueError(
-            f"bands={bands} must divide {PORTABLE_SIMHASH_BITS} with a band "
-            "width dividing 32 (band slices may not straddle the "
-            "packed words)."
+            f"bands={bands} must divide {n_bits} with a band width "
+            "dividing 32 (band slices may not straddle the packed words)."
         )
-    sk = simhash_portable(df, n, text_col, id_col).localCheckpoint(eager=False)
-    bits_per_band = PORTABLE_SIMHASH_BITS // bands
-    # band key = that band's bits_per_band-bit slice of the packed words
+    sk = sketch.localCheckpoint(eager=False)
+    bits_per_band = n_bits // bands
     mask = (1 << bits_per_band) - 1
 
     def band_key(b: int):
@@ -833,25 +815,12 @@ def simhash_pairs_portable(
             F.array(*[band_key(b) for b in range(bands)])
         ).alias("band_idx", "band_key"),
     )
-    if max_band_bucket is not None:
-        ok = (
-            banded.groupBy("band_idx", "band_key")
-            .count()
-            .filter(F.col("count") <= max_band_bucket)
-            .select("band_idx", "band_key")
-        )
-        banded = banded.join(ok, ["band_idx", "band_key"], "left_semi")
     candidates = (
-        banded.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_key")
-        .join(
-            banded.select(F.col("doc_id").alias("doc_b"), "band_idx", "band_key"),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _bucket_pairs(banded, ["band_idx", "band_key"], max_band_bucket)
         .select("doc_a", "doc_b")
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    n_words = PORTABLE_SIMHASH_BITS // 32
+    n_words = n_bits // 32
     a = sk.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"w{m}").alias(f"a{m}") for m in range(n_words)],
@@ -1029,120 +998,6 @@ def connected_components(
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
-SIMHASH_BITS = 64
-SIMHASH_BANDS = 8  # 8 bands × 8 bits — pigeonhole-guarantees recall
-# for Hamming ≤ 7: 7 differing bits cannot touch all 8 bands, so every
-# qualifying pair shares at least one exact band.
-
-
-def _bit_mask(b: int) -> int:
-    """Signed-64 literal with only bit ``b`` set (bit 63 → sign bit)."""
-    mask = 1 << b
-    return mask - (1 << 64) if b == 63 else mask
-
-
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per document from token xxhash64 bit votes.
-
-    The 64 bit positions unroll at plan-build time (Python loop over a
-    constant — still one projection, one pass over the token array per
-    bit, all whole-stage codegen).
-    """
-    exploded = _spread(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(text_col)).alias("tok"),
-    ).select("doc_id", F.xxhash64("tok").alias("h"))
-    # 64 bit votes in one codegen'd aggregate (see minhash_signatures
-    # for why explode+agg beats higher-order array functions here).
-    votes = exploded.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.col("h").bitwiseAND(F.lit(_bit_mask(b)).cast("long")) != 0, 1
-                ).otherwise(-1)
-            ).alias(f"__v{b}")
-            for b in range(SIMHASH_BITS)
-        ]
-    )
-    sim = F.lit(0).cast("long")
-    for b in range(SIMHASH_BITS):
-        mask = F.lit(_bit_mask(b)).cast("long")
-        sim = sim.bitwiseOR(
-            F.when(F.col(f"__v{b}") >= 0, mask).otherwise(F.lit(0).cast("long"))
-        )
-    return votes.select("doc_id", sim.alias("simhash"))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int = 7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = SIMHASH_BANDS,
-    max_band_bucket: int | None = DEFAULT_MAX_BAND_BUCKET,
-) -> DataFrame:
-    """Near-duplicate pairs with Hamming(simhash) ≤ k — exact recall
-    (approximate only for members of >``max_band_bucket`` hot buckets;
-    pass ``max_band_bucket=None`` for the unconditional guarantee).
-
-    Band trick: with ``bands`` exact-match bands, any pair within
-    Hamming < bands shares at least one band (pigeonhole), so the
-    bucket join finds *every* qualifying pair; candidates then verify
-    exactly with bit_count(xor). ``max_hamming ≥ bands`` would silently
-    miss pairs whose differing bits spread across all bands, so it is
-    rejected rather than hedged. Wider tolerance ⇒ raise ``bands``
-    (more/smaller bands ⇒ bigger buckets — the recall/cost dial).
-    """
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs bands > max_hamming for "
-            f"guaranteed recall (got bands={bands}); raise bands or "
-            "lower max_hamming"
-        )
-    sims = simhash(df, text_col, id_col)
-    band_width = SIMHASH_BITS // bands
-    mask = (1 << band_width) - 1
-    band_exprs = [
-        F.shiftright(F.col("simhash"), b * band_width).bitwiseAND(
-            F.lit(mask).cast("long")
-        )
-        for b in range(bands)
-    ]
-    exploded = sims.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_val"),
-    )
-    if max_band_bucket is not None:
-        # Skew guard (see minhash_lsh_pairs): drop band buckets larger
-        # than K docs before the self-join — exact recall becomes
-        # approximate only for mega-cluster members, which any less
-        # crowded band still pairs up.
-        ok = (
-            exploded.groupBy("band_idx", "band_val")
-            .count()
-            .filter(F.col("count") <= max_band_bucket)
-            .select("band_idx", "band_val")
-        )
-        exploded = exploded.join(ok, ["band_idx", "band_val"], "left_semi")
-    left = exploded.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"),
-        "band_idx", "band_val",
-    )
-    right = exploded.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"),
-        "band_idx", "band_val",
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (
-        left.join(right, ["band_idx", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
     )
 
 

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _banded_hamming_pairs, _bucket_pairs, _overlap_counts, _spread
+
 __all__ = [
     "attach_binary_payload",
     "audio_landmark_matches",
@@ -448,8 +450,6 @@ def phash_words(
     barrier materializes the gray array + its sum before the per-word
     bit folds.
     """
-    from .dedup import _spread
-
     src = _payload_bytes(_spread(df), payload_col, id_col)
     bs = F.col("__p.bs")
     n = F.col("__p.n")
@@ -528,84 +528,23 @@ def phash_pairs(
     banded Hamming search on the 128-bit aHash — the standard
     image-dedup primitive of a multimodal training pipeline.
 
-    Same scale shape as ``dedup.simhash_pairs_portable``: each doc
-    explodes into ``bands`` (band_idx, band_key) rows, candidates come
-    from equi-joining band buckets (never all pairs), and the exact
-    Hamming check (``bit_count(xor)`` over the packed words) filters.
-    ``bands > max_hamming`` keeps the pigeonhole recall guarantee: a
-    pair within ``max_hamming`` differs in ≤ max_hamming bands, so at
-    least one band matches. The default 8 bands over 128 bits give
-    16-bit keys — 65 536 buckets per band, so random collisions stay
-    negligible up to ~10⁵-doc shuffle partitions; beyond that pass
-    ``max_band_bucket`` to cap hot buckets (the skew-cap pattern of
-    ``operators.dedup``) — a 256-bit grid is the next growth step.
+    The search is ``dedup._banded_hamming_pairs``, shared with
+    ``dedup.simhash_pairs_portable``: ``bands`` (band_idx, band_key)
+    rows per doc, candidates from the ``dedup._bucket_pairs`` band
+    join (never all pairs), an exact ``bit_count(xor)`` check, and
+    ``bands > max_hamming`` for the pigeonhole recall guarantee. The
+    default 8 bands over 128 bits give 16-bit keys — 65 536 buckets per
+    band, so random collisions stay negligible up to ~10⁵-doc shuffle
+    partitions; beyond that pass ``max_band_bucket`` to cap hot buckets
+    (the skew cap of ``dedup._bucket_pairs``) — a 256-bit grid is the
+    next growth step.
     """
-    if max_hamming >= bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs more than {bands} bands "
-            "for guaranteed recall (pigeonhole)."
-        )
-    if n_bits % bands or (n_bits // bands > 32) or 32 % (n_bits // bands):
-        raise ValueError(
-            f"bands={bands} must divide {n_bits} with a band width "
-            "dividing 32 (band slices may not straddle the packed words)."
-        )
-    sk = phash_words(df, payload_col, id_col, n_bits=n_bits).localCheckpoint(
-        eager=False
-    )
-    bits_per_band = n_bits // bands
-    mask = (1 << bits_per_band) - 1
-
-    def band_key(b: int):
-        lo = b * bits_per_band
-        return F.shiftright(F.col(f"w{lo // 32}"), lo % 32).bitwiseAND(
-            F.lit(mask)
-        )
-
-    banded = sk.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[band_key(b) for b in range(bands)])
-        ).alias("band_idx", "band_key"),
-    )
-    if max_band_bucket is not None:
-        ok = (
-            banded.groupBy("band_idx", "band_key")
-            .count()
-            .filter(F.col("count") <= max_band_bucket)
-            .select("band_idx", "band_key")
-        )
-        banded = banded.join(ok, ["band_idx", "band_key"], "left_semi")
-    candidates = (
-        banded.select(F.col("doc_id").alias("doc_a"), "band_idx", "band_key")
-        .join(
-            banded.select(
-                F.col("doc_id").alias("doc_b"), "band_idx", "band_key"
-            ),
-            ["band_idx", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    n_words = n_bits // 32
-    a = sk.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"w{m}").alias(f"a{m}") for m in range(n_words)],
-    )
-    b = sk.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"w{m}").alias(f"c{m}") for m in range(n_words)],
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a{m}").bitwiseXOR(F.col(f"c{m}")))
-        for m in range(n_words)
-    ).cast("bigint")
-    return (
-        candidates.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    return _banded_hamming_pairs(
+        phash_words(df, payload_col, id_col, n_bits=n_bits),
+        n_bits,
+        max_hamming,
+        bands,
+        max_band_bucket,
     )
 
 
@@ -750,8 +689,8 @@ def _scene_numbered_frames(
 
 # Scene-signature inverted-index cap: identical (signature, length,
 # sum) triples across more than this many scene rows are boilerplate
-# (test cards, black frames) and are dropped — the skew-cap pattern of
-# every media index in this module.
+# (test cards, black frames) and are dropped — the skew cap of
+# ``dedup._bucket_pairs``, which every media index in this module runs.
 DEFAULT_MAX_SCENE_SIG_FREQ = 200
 
 
@@ -835,19 +774,8 @@ def scene_copy_matches(
         .dropDuplicates(["doc_id", *key])
         .localCheckpoint(eager=False)
     )
-    if max_sig_freq is not None:
-        ok = (
-            sigs.groupBy(*key)
-            .count()
-            .filter(F.col("count") <= max_sig_freq)
-            .select(*key)
-        )
-        sigs = sigs.join(ok, key, "left_semi")
-    left = sigs.select(F.col("doc_id").alias("doc_a"), *key)
-    right = sigs.select(F.col("doc_id").alias("doc_b"), *key)
     return (
-        left.join(right, key)
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _bucket_pairs(sigs, key, max_sig_freq)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared_scenes"))
         .filter(F.col("shared_scenes") >= min_shared)
@@ -884,8 +812,6 @@ def audio_windows(
     is ``_spread`` first: fingerprinting is CPU-bound per row and a
     small parquet arrives as one partition.
     """
-    from .dedup import _spread
-
     src = _payload_bytes(_spread(df), payload_col, id_col)
     bs, n = F.col("__p.bs"), F.col("__p.n")
     width, stride = AUDIO_WINDOW_BYTES, AUDIO_STRIDE
@@ -937,23 +863,8 @@ def audio_offset_matches(
     wtab = audio_windows(df, payload_col, id_col).localCheckpoint(
         eager=False
     )
-    if max_fp_freq is not None:
-        ok = (
-            wtab.groupBy("fp")
-            .count()
-            .filter(F.col("count") <= max_fp_freq)
-            .select("fp")
-        )
-        wtab = wtab.join(ok, "fp", "left_semi")
-    left = wtab.select(
-        F.col("doc_id").alias("doc_a"), F.col("t").alias("ta"), "fp"
-    )
-    right = wtab.select(
-        F.col("doc_id").alias("doc_b"), F.col("t").alias("tb"), "fp"
-    )
     return (
-        left.join(right, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _bucket_pairs(wtab, ["fp"], max_fp_freq, carry=["t"])
         .groupBy(
             "doc_a",
             "doc_b",
@@ -1088,25 +999,8 @@ def audio_landmark_matches(
     """
     lm = audio_landmarks(df, fanout, max_dt, payload_col, id_col)
     lm = lm.localCheckpoint(eager=False)
-    if max_landmark_freq is not None:
-        ok = (
-            lm.groupBy("fp_a", "fp_b", "dt")
-            .count()
-            .filter(F.col("count") <= max_landmark_freq)
-            .select("fp_a", "fp_b", "dt")
-        )
-        lm = lm.join(ok, ["fp_a", "fp_b", "dt"], "left_semi")
-    left = lm.select(
-        F.col("doc_id").alias("doc_a"), F.col("t").alias("ta"),
-        "fp_a", "fp_b", "dt",
-    )
-    right = lm.select(
-        F.col("doc_id").alias("doc_b"), F.col("t").alias("tb"),
-        "fp_a", "fp_b", "dt",
-    )
     return (
-        left.join(right, ["fp_a", "fp_b", "dt"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _bucket_pairs(lm, ["fp_a", "fp_b", "dt"], max_landmark_freq, carry=["t"])
         .groupBy(
             "doc_a",
             "doc_b",
@@ -1142,8 +1036,6 @@ def video_shingles(
     A real pipeline swaps per-frame luminance histograms in for the
     checksum; the delta/shingle machinery is unchanged.
     """
-    from .dedup import _spread
-
     src = _payload_bytes(_spread(df), payload_col, id_col)
     bs, n = F.col("__p.bs"), F.col("__p.n")
     n_frames = n % 30 + 1
@@ -1200,43 +1092,19 @@ def video_dedup_pairs(
     (re-encodes under the fake codec). Emits (doc_a, doc_b, jaccard ≥
     threshold), doc_a < doc_b.
 
-    Same freq-capped inverted-index plan as the n-gram text dedup:
-    distinct shingle table → hot-shingle cap (static scenes /
+    Same freq-capped inverted-index plan as the n-gram text dedup
+    (``dedup._overlap_counts``): distinct shingle table → hot-shingle cap (static scenes /
     boilerplate intros) → equi-self-join → per-pair counts — candidate
     volume is Σ c² over capped counts, never videos².
     """
     tab = video_shingles(df, payload_col, id_col).localCheckpoint(
         eager=False
     )
-    if max_shingle_freq is not None:
-        ok = (
-            tab.groupBy("shingle")
-            .count()
-            .filter(F.col("count") <= max_shingle_freq)
-            .select("shingle")
-        )
-        tab = tab.join(ok, "shingle", "left_semi")
-    sizes = tab.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    left = tab.select(F.col("doc_id").alias("doc_a"), "shingle")
-    right = tab.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        left.join(right, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     jaccard = F.col("n_common").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("n_common")
     ).cast("double")
     return (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
+        _overlap_counts(tab, "shingle", max_shingle_freq)
         .select("doc_a", "doc_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )

@@ -1106,46 +1106,30 @@ def cdc_chunk_pairs(
     threshold — chunk-level dedup that survives prefix insertions and
     edits, which fixed-offset chunk comparison cannot.
 
-    Inverted-index plan (the dedup.py shape): distinct (doc, chunk_sha)
-    → per-sha frequency cap (boilerplate chunks shared by everyone
-    would create c² join rows) → self-join on sha → per-pair counts.
+    Inverted-index plan (``dedup._overlap_counts``): distinct (doc,
+    chunk_sha) → per-sha frequency cap (boilerplate chunks shared by
+    everyone would create c² join rows) → self-join on sha → per-pair
+    counts.
     """
+    from .dedup import _overlap_counts  # local: dedup imports text
+
     tab = (
         cdc_chunks(df, divisor=divisor, text_col=text_col, id_col=id_col)
         .select(F.col(id_col).alias("doc_id"), "chunk_sha")
         .distinct()
         .localCheckpoint(eager=False)
     )
-    if max_chunk_freq is not None:
-        ok = (
-            tab.groupBy("chunk_sha")
-            .count()
-            .filter(F.col("count") <= max_chunk_freq)
-            .select("chunk_sha")
-        )
-        tab = tab.join(ok, "chunk_sha", "left_semi")
-    sizes = tab.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_chunks"))
-    left = tab.select(F.col("doc_id").alias("doc_a"), "chunk_sha")
-    right = tab.select(F.col("doc_id").alias("doc_b"), "chunk_sha")
-    shared = (
-        left.join(right, "chunk_sha")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
-    )
     containment = F.round(
-        F.col("n_shared") / F.least("n_a", "n_b").cast("double"), 6
+        F.col("n_common") / F.least("n_a", "n_b").cast("double"), 6
     )
     return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_chunks").alias("n_a")),
+        _overlap_counts(tab, "chunk_sha", max_chunk_freq)
+        .select(
             "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_chunks").alias("n_b")),
             "doc_b",
+            F.col("n_common").alias("n_shared"),
+            containment.alias("containment"),
         )
-        .select("doc_a", "doc_b", "n_shared", containment.alias("containment"))
         .filter(F.col("containment") >= min_containment)
     )
 

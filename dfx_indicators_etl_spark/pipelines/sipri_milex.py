@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..operators import indicator as ops
 from ..sources.xlsx import infer_header_row, read_xlsx, xlsx_to_spark
-from .base import BaseRetriever, BaseTransformer
+from .base import BaseRetriever, BaseTransformer, union_all
 
 __all__ = ["Retriever", "Transformer", "METADATA"]
 
@@ -70,8 +70,9 @@ def read_sipri_xlsx(spark: SparkSession, path: str) -> DataFrame:
     (sipri_milex.py:40-53, 73-93): per METADATA sheet, infer the header
     row (first row whose column 0 is "Country"), null the ``xxx``/
     ``...`` sentinels, stamp ``indicator_name``, and stack sheets —
-    ``unionByName(allowMissingColumns)`` fills year columns a sheet
-    lacks with nulls, like the reference's ``pd.concat``.
+    ``union_all`` (a balanced ``unionByName(allowMissingColumns)``)
+    fills year columns a sheet lacks with nulls, like the reference's
+    ``pd.concat``, and keeps columns in first-appearance order.
     """
     frames = []
     for sheet, indicator_name in METADATA.items():
@@ -87,10 +88,7 @@ def read_sipri_xlsx(spark: SparkSession, path: str) -> DataFrame:
             *[F.col(c).cast("double").alias(c) for c in year_cols],
         )
         frames.append(df)
-    out = frames[0]
-    for df in frames[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return out
+    return union_all(frames)
 
 
 class Transformer(BaseTransformer):

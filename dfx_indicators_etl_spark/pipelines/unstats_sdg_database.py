@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..operators import indicator as ops
 from ..sources import read_csv
 from ..sources.xlsx import xlsx_to_spark
-from .base import BaseRetriever, BaseTransformer
+from .base import BaseRetriever, BaseTransformer, union_all
 
 __all__ = ["Retriever", "Transformer", "KNOWN_COLUMNS"]
 
@@ -54,9 +54,9 @@ class Retriever(BaseRetriever):
     """Bulk-extract loader: the reference reads one ``Goal{n}.xlsx``
     per SDG goal and concatenates (unstats_sdg_database.py:52-66);
     here a directory of ``Goal*.xlsx`` parses through the OOXML bridge
-    and unions (missing columns null-filled, like ``pd.concat``). A
-    ``.csv`` path loads the same extract in CSV form (distributed
-    scan — prefer it when the extract is large)."""
+    and unions with ``union_all`` (missing columns null-filled, like
+    ``pd.concat``). A ``.csv`` path loads the same extract in CSV form
+    (distributed scan — prefer it when the extract is large)."""
 
     uri = "inputs/SDG"
 
@@ -72,11 +72,7 @@ class Retriever(BaseRetriever):
         workbooks = sorted(_glob.glob(_os.path.join(path, "Goal*.xlsx")))
         if not workbooks:
             raise FileNotFoundError(f"no Goal*.xlsx under {path!r}")
-        frames = [xlsx_to_spark(spark, wb) for wb in workbooks]
-        out = frames[0]
-        for frame in frames[1:]:
-            out = out.unionByName(frame, allowMissingColumns=True)
-        return out
+        return union_all([xlsx_to_spark(spark, wb) for wb in workbooks])
 
 
 class Transformer(BaseTransformer):

@@ -497,7 +497,7 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # 128-bit simhash: four 32-bit md5 streams (operators/dedup.py
-# SIMHASH_BITS), 8 bands × 16-bit keys.
+# PORTABLE_SIMHASH_BITS), 8 bands × 16-bit keys.
 _SH_HASHES_SQL = f"""
     toks AS ({TOKS_SQL}),
     doc_shingles AS (

@@ -95,8 +95,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Dimension tables broadcast; 64 MB covers every dim at bench SF
-        # while staying executor-memory-safe on a cluster.
+        # Small join sides broadcast (the analytic queries' dimension
+        # tables, the dedup operators' per-doc size tables); 64 MB stays
+        # executor-memory-safe on a cluster. The indicator star joins no
+        # dim: its dims are literals folded into the plan.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

@@ -71,14 +71,18 @@ def test_minhash_lsh_finds_near_dup(planted):
 
 
 def test_simhash_hamming(planted):
-    # Hamming tolerance 10 needs > 10 bands for guaranteed recall.
+    # Hamming tolerance 15 needs > 15 bands for guaranteed recall. The
+    # 128-bit sketch votes on distinct word 3-shingles: the near dup
+    # (1,3) differs in its last shingle only, 15 of 128 bits.
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in dedup.simhash_pairs(planted, max_hamming=10, bands=16).collect()
+        for r in dedup.simhash_pairs_portable(
+            planted, max_hamming=15, bands=16
+        ).collect()
     }
-    assert pairs[(1, 2)] == 0            # identical docs → identical simhash
-    assert pairs[(1, 3)] <= 10           # near dup within radius
-    assert (1, 4) not in pairs
+    # identical docs → identical sketch; the unrelated doc 4 pairs with
+    # nobody
+    assert pairs == {(1, 2): 0, (1, 3): 15, (2, 3): 15}
 
 
 def test_simhash_rejects_unguaranteed_radius(planted):
@@ -86,7 +90,10 @@ def test_simhash_rejects_unguaranteed_radius(planted):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="bands"):
-        dedup.simhash_pairs(planted, max_hamming=8, bands=8)
+        dedup.simhash_pairs_portable(planted, max_hamming=8, bands=8)
+    # 3 bands do not divide the 128 bits into word-aligned slices
+    with _pytest.raises(ValueError, match="dividing 32"):
+        dedup.simhash_pairs_portable(planted, max_hamming=2, bands=3)
 
 
 def test_connected_components_labels_transitive_closure(spark):
@@ -156,9 +163,22 @@ def test_minhash_band_bucket_cap(planted):
 
 
 def test_simhash_band_bucket_cap(planted):
+    # Bucket cap 1 drops every colliding band bucket → no candidates;
+    # a generous cap changes nothing.
     assert (
-        dedup.simhash_pairs(planted, max_hamming=7, max_band_bucket=1).count() == 0
+        dedup.simhash_pairs_portable(
+            planted, max_hamming=15, bands=16, max_band_bucket=1
+        ).count()
+        == 0
     )
+    capped = dedup.simhash_pairs_portable(
+        planted, max_hamming=15, bands=16, max_band_bucket=1000
+    ).collect()
+    assert {(r["doc_a"], r["doc_b"]): r["hamming"] for r in capped} == {
+        (1, 2): 0,
+        (1, 3): 15,
+        (2, 3): 15,
+    }
 
 
 def test_skew_caps_default_on():
@@ -169,12 +189,87 @@ def test_skew_caps_default_on():
 
     assert dedup.DEFAULT_MAX_SHINGLE_FREQ is not None
     assert dedup.DEFAULT_MAX_BAND_BUCKET is not None
-    sig = inspect.signature(dedup.ngram_jaccard_pairs)
-    assert sig.parameters["max_shingle_freq"].default == dedup.DEFAULT_MAX_SHINGLE_FREQ
-    sig = inspect.signature(dedup.minhash_lsh_pairs)
-    assert sig.parameters["max_band_bucket"].default == dedup.DEFAULT_MAX_BAND_BUCKET
-    sig = inspect.signature(dedup.simhash_pairs)
-    assert sig.parameters["max_band_bucket"].default == dedup.DEFAULT_MAX_BAND_BUCKET
+    for fn, param, default in [
+        (dedup.ngram_jaccard_pairs, "max_shingle_freq", dedup.DEFAULT_MAX_SHINGLE_FREQ),
+        (dedup.containment_pairs, "max_shingle_freq", dedup.DEFAULT_MAX_SHINGLE_FREQ),
+        (dedup.shared_spans, "max_shingle_freq", dedup.DEFAULT_MAX_SHINGLE_FREQ),
+        (dedup.minhash_lsh_pairs, "max_band_bucket", dedup.DEFAULT_MAX_BAND_BUCKET),
+        (dedup.minhash_lsh_pairs_portable, "max_band_bucket", dedup.DEFAULT_MAX_BAND_BUCKET),
+        (dedup.simhash_pairs_portable, "max_band_bucket", dedup.DEFAULT_MAX_BAND_BUCKET),
+    ]:
+        assert inspect.signature(fn).parameters[param].default == default, fn
+
+
+def _bucket_index(seed: int = 12) -> list[tuple[int, int, int, int]]:
+    """~200 seeded random (doc_id, k1, k2, t) index rows, plus planted
+    buckets: k1=100 holds exactly 5 rows, k1=101 holds 6, and k1=102
+    lists doc 7 twice."""
+    import random
+
+    rng = random.Random(seed)
+    rows = [
+        (rng.randrange(60), rng.randrange(8), rng.randrange(3), rng.randrange(1000))
+        for _ in range(190)
+    ]
+    rows += [(70 + i, 100, 0, i) for i in range(5)]
+    rows += [(80 + i, 101, 0, i) for i in range(6)]
+    rows += [(7, 102, 0, 1), (7, 102, 0, 2), (8, 102, 0, 3)]
+    return rows
+
+
+def _brute_bucket_pairs(rows, keys, cap, carry):
+    """Every (doc_a < doc_b) row pair in each bucket of at most ``cap``
+    rows, listed by plain Python loops."""
+    from collections import Counter, defaultdict
+
+    col = {"doc_id": 0, "k1": 1, "k2": 2, "t": 3}
+    buckets = defaultdict(list)
+    for r in rows:
+        buckets[tuple(r[col[k]] for k in keys)].append(r)
+    out = Counter()
+    for key, members in buckets.items():
+        if cap is not None and len(members) > cap:
+            continue
+        for ra in members:
+            for rb in members:
+                if ra[0] < rb[0]:
+                    sides = [v for c in carry for v in (ra[col[c]], rb[col[c]])]
+                    out[(ra[0], rb[0], *key, *sides)] += 1
+    return out
+
+
+@pytest.mark.parametrize(
+    "keys,cap,carry",
+    [
+        (["k1"], None, ()),
+        (["k1"], 5, ()),
+        (["k1", "k2"], None, ()),
+        (["k1"], None, ("t",)),
+        (["k1", "k2"], 5, ("t",)),
+    ],
+    ids=["uncapped", "cap_edge", "two_col_key", "carry", "two_col_key_cap_carry"],
+)
+def test_bucket_pairs_matches_brute_force(spark, keys, cap, carry):
+    from collections import Counter
+
+    rows = _bucket_index()
+    index = spark.createDataFrame(rows, "doc_id long, k1 long, k2 long, t long")
+    got_df = dedup._bucket_pairs(index, keys, cap, carry)
+    cols = ["doc_a", "doc_b", *keys, *[c + s for c in carry for s in "ab"]]
+    got = Counter(tuple(r) for r in got_df.select(*cols).collect())
+    want = _brute_bucket_pairs(rows, keys, cap, carry)
+    assert got == want
+    assert all(a < b for a, b, *_ in got)  # a doc never pairs with itself
+    planted = Counter(row[2] for row in got.elements())  # pairs per k1
+    # doc 7 is listed twice in bucket 102: (7, 8) once per listing
+    assert planted[102] == 2
+    if cap == 5:
+        # a bucket of exactly cap rows stays (5·4/2 pairs) ...
+        assert planted[100] == 10
+        # ... one of cap + 1 rows goes
+        assert 101 not in planted
+    else:
+        assert planted[100] == 10 and planted[101] == 15
 
 
 def test_hot_shingle_corpus_stays_bounded(spark):

@@ -56,6 +56,30 @@ def test_exact_dedup_single_shuffle(spark, sf_dir):
     assert _shuffles(_plan(spark, sf_dir, "dedup_exact")) == 1
 
 
+@pytest.mark.parametrize(
+    "name,shuffles,broadcasts,sort_merge",
+    [
+        ("dedup_ngram_jaccard", 3, 3, 0),
+        ("dedup_minhash", 1, 3, 0),
+        ("dedup_simhash", 1, 3, 0),
+        ("dedup_shared_spans", 1, 1, 0),
+        ("mm_phash_dedup_capped", 3, 5, 0),
+        ("mm_video_dedup", 7, 7, 0),
+    ],
+)
+def test_bucket_join_plan_shape(spark, sf_dir, name, shuffles, broadcasts, sort_merge):
+    """The near-duplicate searches built on ``dedup._bucket_pairs``
+    keep their executed-plan shape (the counts PLANS.md records): a
+    change to the shared cap-and-self-join moves every one of them."""
+    plan = _plan(spark, sf_dir, name)
+    assert _shuffles(plan) == shuffles
+    assert (
+        plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
+        == broadcasts
+    )
+    assert plan.count("SortMergeJoin") == sort_merge
+
+
 def test_observation_view_fact_never_shuffles(spark, sf_dir):
     plan = _plan(spark, sf_dir, "ind_observation_view")
     assert plan.count("BroadcastHashJoin") >= 2
