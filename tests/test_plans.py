@@ -90,8 +90,10 @@ def test_observation_view_fact_never_shuffles(spark, sf_dir):
 def test_star_series_fact_joins_no_dim(spark, sf_dir, tmp_path):
     """The series fact joins no dim: it looks its ids up in literals
     folded into the plan. Over landed parquet its executed plan holds
-    no join and no exchange, broadcast or shuffle; over the registry's
-    events it adds no join to its ``observations`` input."""
+    no join and no exchange, broadcast or shuffle, and its one sort is
+    local (the year-first layout is a ``sortWithinPartitions``, not a
+    global sort); over the registry's events it adds no join to its
+    ``observations`` input."""
     from dfx_indicators_etl_spark import database
     from dfx_indicators_etl_spark.plans.indicator_queries import observations
 
@@ -110,6 +112,7 @@ def test_star_series_fact_joins_no_dim(spark, sf_dir, tmp_path):
     series = database.build_star_schema(landed, country)["series"]
     plan = series._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Exchange" not in plan, plan
+    assert re.findall(r"\bSort \[[^\]]*\], (\w+)", plan) == ["false"], plan
 
     def joins(plan: str) -> int:
         return len(re.findall(r"\w+Join\b", plan))
